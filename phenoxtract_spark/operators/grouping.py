@@ -17,17 +17,6 @@ class MultiplicityError(ValueError):
     pass
 
 
-def group_collect(df: DataFrame, subject: str, column: str, alias: str | None = None) -> DataFrame:
-    """G2 (~ contextualized_data_frame.rs:129-157): subject → list of
-    stringified non-null values, sorted for determinism."""
-    alias = alias or f"{column}_values"
-    return (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(subject)
-        .agg(F.sort_array(F.collect_list(F.col(column).cast("string"))).alias(alias))
-    )
-
-
 def single_valued(
     frames: list[tuple[DataFrame, str, str]],
     alias: str = "value",

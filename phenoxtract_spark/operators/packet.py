@@ -18,19 +18,6 @@ from ..functions.text import prefixed_id
 SCHEMA_VERSION = "2.0"
 
 
-def collect_section(df: DataFrame, subject: str, item: Column, order_by: list[Column] | None,
-                    alias: str) -> DataFrame:
-    """Aggregate one packet section: subject → sorted array of item structs.
-    Deterministic ordering via sort_array (structs compare field-by-field) or
-    an explicit pre-sort key folded into the struct."""
-    agg = F.sort_array(F.collect_list(item)) if order_by is None else F.collect_list(item)
-    out = df
-    if order_by is not None:
-        # repartition+sortWithinPartitions guarantees per-group arrival order
-        out = out.repartition(F.col(subject)).sortWithinPartitions(subject, *order_by)
-    return out.groupBy(F.col(subject).alias("subject_id")).agg(agg.alias(alias))
-
-
 def assemble_packets(
     subjects: DataFrame,
     sections: dict[str, DataFrame],

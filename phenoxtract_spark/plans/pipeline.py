@@ -1,5 +1,5 @@
-"""The pipeline compiler: Extract → Transform → Load as ONE composed Spark
-plan (SURVEY §3; ~ pipeline.rs:36-85, transform/transform_module.rs:26-43).
+"""The pipeline compiler: Extract → Transform → Load as composed Spark
+plans (SURVEY §3; ~ pipeline.rs:36-85, transform/transform_module.rs:26-43).
 
 Stage parity with the reference:
 
@@ -11,8 +11,15 @@ Stage parity with the reference:
 5. assemble   — nested packet struct + metadata stamp (G10), to_json
 6. load       — sharded JSONL (scale) or file-per-subject (S6 parity)
 
-Everything stays lazy until load; Catalyst sees the whole graph and can
-push filters into scans and broadcast every dimension join.
+Extract, preprocess and the strategies compose into one lazy plan per
+table, so Catalyst can push filters into scans and broadcast every
+dimension join.  ``transform`` ends with ONE materialization barrier per
+table (``session.materialize``): collect, assemble and load then read the
+stored rows.  Without it every eager action downstream — each collector
+probe, the v2 renderer's probes and every AQE stage of the sink — re-ran
+the whole upstream plan from the file scan (row numbering, casts,
+dimension joins included); on the cohort benchmark's ``etl_v2_files``
+that was 18 collect jobs and 37 sink jobs, each replaying the reader.
 """
 
 from __future__ import annotations
@@ -26,6 +33,7 @@ from pyspark.sql import functions as F
 from ..descriptors import ContextKind, ContextualizedDataFrame
 from ..functions import casting, cleaning
 from ..operators import packet as packet_ops
+from ..session import materialize
 from . import collectors
 from .strategies import Strategy
 
@@ -89,7 +97,9 @@ class Pipeline:
         for s in self.strategies:
             if s.is_valid(cdfs):
                 cdfs = s.apply(cdfs)
-        return cdfs
+        # the barrier (module docstring): also when no strategy ran, since
+        # the collectors would still re-run the preprocess casts
+        return [cdf.with_df(materialize(cdf.df)) for cdf in cdfs]
 
     # -- stage 4+5: collect + assemble -------------------------------------
     def collect(self, cdfs: list[ContextualizedDataFrame]) -> DataFrame:

@@ -4,7 +4,9 @@ Each strategy follows the reference's trait shape
 (transform/strategies/traits.rs:16-30): ``is_valid`` gates the pass at
 plan-build time from descriptors alone (M7 — no data scan), ``apply``
 rewrites the CDF set.  All rewrites stay declarative: broadcast joins +
-column expressions, so the composed pipeline remains ONE Catalyst plan.
+column expressions, so each table's strategy chain composes into ONE lazy
+Catalyst plan over its preprocess plan; ``Pipeline.transform``
+materializes that plan once, after the last strategy.
 """
 
 from __future__ import annotations
@@ -240,13 +242,14 @@ class DateToAgeStrategy(Strategy):
 
     def dob_map(self, cdfs) -> DataFrame:
         """(subject_id, dob) with per-patient uniqueness enforced
-        (~ date_to_age.rs:222-271)."""
+        (~ date_to_age.rs:222-271): a subject with conflicting DOBs raises
+        MultiplicityError when ``strict``, else gets a null DOB (no age)."""
         frames = []
         for cdf in cdfs:
             subj = cdf.subject_col
             for col in self._columns(cdf, ContextKind.DATE_OF_BIRTH):
                 frames.append((cdf.df, subj, col))
-        dob = grouping.single_valued(frames, alias="dob", strict=True)
+        dob = grouping.single_valued(frames, alias="dob", strict=self.strict)
         # collision-proof internal names: user tables may legitimately have
         # columns called 'subject_id' or 'dob'
         return dob.select(

@@ -129,6 +129,18 @@ def normalize_events(df):
     return df
 
 
+def materialize(df):
+    """Compute ``df`` now and return a DataFrame over its stored rows, whose
+    plan starts at those rows instead of re-running ``df``'s lineage.
+
+    ``localCheckpoint`` rather than ``persist``: the stored rows are not
+    looked up by plan, so a later run that re-reads a rewritten file at
+    the same path can never be served stale rows, and the blocks are
+    freed once the returned DataFrame is unreachable (no release call).
+    This is the one place a materialization policy would be chosen."""
+    return df.localCheckpoint(eager=True)
+
+
 # fan_out's partition probe, memoized per (application, analyzed plan):
 # ``df.rdd`` is a full driver-side physical planning + RDD conversion per
 # call, and the probe is pure within a session (same analyzed plan over

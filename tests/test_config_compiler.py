@@ -5,7 +5,9 @@ import json
 
 import pytest
 
+from phenoxtract_spark.descriptors import ContextualizedDataFrame
 from phenoxtract_spark.operators import ontology
+from phenoxtract_spark.operators.grouping import MultiplicityError
 from phenoxtract_spark.plans.config import ConfigError, compile_pipeline, run_from_config
 from phenoxtract_spark.sources.readers import load_config
 
@@ -83,3 +85,32 @@ def test_config_errors(spark):
         )
     with pytest.raises(ConfigError, match="no DataFrame supplied"):
         run_from_config({"tables": {"t": {"subject_id": "x"}}}, spark, {})
+
+
+def _dob_conflict_ages(spark, strict):
+    """Onset ages after a config-declared ``date_to_age`` over a table in
+    which P1 has two distinct DOBs and P2 has one."""
+    cfg = {
+        "tables": {"demo": {"subject_id": "pid", "columns": [
+            {"identifier": "dob", "context": "date_of_birth"},
+            {"identifier": "onset", "context": {"kind": "onset", "time_type": "date"}},
+        ]}},
+        "strategies": [{"kind": "date_to_age", "strict": strict}],
+    }
+    pipe, contexts = compile_pipeline(cfg, spark)
+    df = spark.createDataFrame(
+        [("P1", "1990-06-01", "2020-06-01"), ("P1", "1991-01-01", "2020-06-01"),
+         ("P2", "1980-01-01", "2020-01-01")],
+        "pid string, dob string, onset string",
+    )
+    cdfs = pipe.preprocess([ContextualizedDataFrame(df=df, context=contexts["demo"])])
+    return [(r["pid"], r["onset"]) for r in pipe.transform(cdfs)[0].df.orderBy("pid").collect()]
+
+
+def test_date_to_age_strict_from_config(spark):
+    # lenient: the conflicting subject gets no DOB, so no age; others convert
+    assert _dob_conflict_ages(spark, strict=False) == [
+        ("P1", None), ("P1", None), ("P2", "P40Y"),
+    ]
+    with pytest.raises(MultiplicityError, match="P1"):
+        _dob_conflict_ages(spark, strict=True)

@@ -382,3 +382,56 @@ def test_output_type_strict_cast_error(spark):
     )
     with pytest.raises(CastError):
         Pipeline().preprocess([ContextualizedDataFrame(df=df, context=ctx)])
+
+
+def _plan_leaves(df):
+    """(class name, RDD lineage or '') of every leaf of the optimized plan."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        name = leaf.getClass().getSimpleName()
+        out.append((name, leaf.rdd().toDebugString() if name == "LogicalRDD" else ""))
+    return out
+
+
+@pytest.mark.parametrize("with_strategies", [True, False])
+def test_transform_ends_in_one_barrier_per_table(spark, hpo_dim, tmp_path, with_strategies):
+    """After ``Pipeline.transform`` each table's plan reads only its
+    materialized rows: no CSV file scan, and no Python RDD from the ingest
+    row numbering, is left for the collectors and the sink to re-run —
+    also when no strategy is valid."""
+    from phenoxtract_spark.sources.readers import ExtractionConfig, read_csv
+
+    path = tmp_path / "cohort.csv"
+    path.write_text("pid,sex,hpo\nP1,m,fever\nP2,female,no_info\n")
+    df = read_csv(spark, str(path), ExtractionConfig("cohort"), attach_rownum=True)
+    ctx = TableContext(
+        name="cohort",
+        series_contexts=[
+            sc("pid", ContextKind.SUBJECT_ID),
+            sc("sex", ContextKind.SUBJECT_SEX),
+            SeriesContext(
+                identifier=Identifier.of("hpo"),
+                data_context=Context(ContextKind.HPO),
+                alias_map={"no_info": None},
+            ),
+        ],
+    )
+    strategies = [
+        AliasMapStrategy(),
+        OntologyNormaliserStrategy(ontology_dim=hpo_dim),
+        MappingStrategy(spark, ContextKind.SUBJECT_SEX, mapping.SEX_MAP),
+    ] if with_strategies else []
+    pipe = Pipeline(strategies=strategies)
+    cdfs = pipe.transform(pipe.preprocess([ContextualizedDataFrame(df=df, context=ctx)]))
+    for cdf in cdfs:
+        leaves = _plan_leaves(cdf.df)
+        assert [name for name, _ in leaves] == ["LogicalRDD"], leaves
+        lineage = leaves[0][1]
+        assert "FileScanRDD" not in lineage and "PythonRDD" not in lineage, lineage
+    rows = {r["pid"]: r for r in cdfs[0].df.collect()}
+    assert set(rows) == {"P1", "P2"}
+    if with_strategies:
+        assert rows["P1"]["sex"] == "MALE" and rows["P1"]["hpo"] == "HP:0001945"
+        assert rows["P2"]["hpo"] is None
