@@ -62,6 +62,10 @@ _PRIORITY = [
     # (the extended pre-checkpoint scale audit found and fixed a hidden
     # corpus-sized top-k window here — implementation changed, so pinned)
     "similarity_mmr_rerank",
+    # --- same rule, after r13: the two queries_joins salted queries,
+    # moved onto operators/skew.py (deterministic row salt; the join now
+    # plans as the salted ShuffledHashJoin) ------------------------------
+    "skew_salted_agg", "skew_salted_join",
     # --- last-seen-age recycling (the standing r11 policy: with every
     # query driver-checked at least once, the non-rep slots recycle the
     # queries whose most recent driver row is OLDEST — r12 refreshed
@@ -81,8 +85,7 @@ _PRIORITY = [
     "similarity_pq_adc_topk", "semi_join_customers_with_orders",
     "anti_join_parts_never_bulk_ordered", "having_big_customers",
     "dedup_pipeline_canonical", "dedup_connected_components",
-    "dedup_simhash_pairs", "text_tfidf_topk",
-    "dedup_semantic_canonical",
+    "dedup_simhash_pairs",
 ]
 
 

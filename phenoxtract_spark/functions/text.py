@@ -6,7 +6,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 HPO_ID_RX = r"HP:\d{7}"
-CURIE_RX = r"^[A-Za-z][A-Za-z0-9.]*:\S+$"
 
 
 def _c(col: Column | str) -> Column:
@@ -40,8 +39,3 @@ def prefixed_id(prefix: Column | str, value: Column | str, sep: str = "-") -> Co
         .when(already, v)
         .otherwise(F.concat_ws(sep, p, v))
     )
-
-
-def is_curie(col: Column | str) -> Column:
-    """CURIE-shaped predicate (prefix:local), used by ontology lookup routing."""
-    return _c(col).rlike(CURIE_RX)

@@ -1,4 +1,4 @@
-"""Projection / column-identification operators (SURVEY §2.2 P1-P7).
+"""Projection / column-identification operators (SURVEY §2.2 P2-P5).
 
 P2/P3's metadata predicate DSL filters *schema*, not rows — driver-side
 Python over descriptors.  P5 (drop all-null columns) is the one distributed
@@ -15,17 +15,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..descriptors import (
-    Context,
     ContextKind,
     ContextualizedDataFrame,
     Identifier,
     SeriesContext,
 )
-
-
-def resolve_identifier(df: DataFrame, ident: Identifier) -> list[str]:
-    """P1: resolve Single/Regex/Multi identifier to columns in table order."""
-    return ident.resolve(df.columns)
 
 
 @dataclass
@@ -109,16 +103,3 @@ def drop_all_null_columns(df: DataFrame, candidates: list[str] | None = None) ->
     counts = df.agg(*[F.count(F.col(c)).alias(c) for c in candidates]).collect()[0].asDict()
     dead = [c for c, n in counts.items() if n == 0]
     return df.drop(*dead) if dead else df
-
-
-def retag_contexts(cdf: ContextualizedDataFrame, mapping: dict[ContextKind, Context]) -> ContextualizedDataFrame:
-    """P7 (~ contextualized_data_frame.rs:828-848): bulk-replace data
-    contexts via a kind→Context map (e.g. Onset(Date)→Onset(Age) after M4)."""
-    from dataclasses import replace
-
-    new_scs = []
-    for sc in cdf.context.series_contexts:
-        repl = mapping.get(sc.data_context.kind)
-        new_scs.append(replace(sc, data_context=repl) if repl else sc)
-    ctx = type(cdf.context)(name=cdf.context.name, series_contexts=new_scs)
-    return ContextualizedDataFrame(df=cdf.df, context=ctx)

@@ -6,18 +6,16 @@ scale-pattern joins a 100 TB pipeline needs).
   Implemented as union + window ``last(ignorenulls)`` — ONE shuffle on the
   key, no range-join row explosion, no per-key driver loops.  This is the
   streaming-friendly formulation (state = one row per key).
-- ``salted_join`` / ``salted_agg``: explicit skew mitigation.  AQE's skew
-  handling (enabled in session.py) covers sort-merge joins at runtime;
-  salting is for the cases AQE can't split (broadcast-ineligible skewed
-  aggregation keys), and for deterministic plan shape.
 - ``write_bucketed``: co-locate repeated large-large joins by pre-bucketing
   both sides on the join key — the shuffle happens once at write time,
   every later join is shuffle-free.
+
+Skew salting (salted aggregates and joins) lives in ``operators/skew.py``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -119,60 +117,6 @@ def as_of_join(
         F.col("_rpick")[v].alias(f"{prefix}{v}") for v in right_vals
     ]
     return carried.select(*out_cols)
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: list[tuple[str, str, str]],
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-stage aggregation for skewed keys: stage 1 aggregates on
-    (keys, salt) — spreading one hot key over ``salt_buckets`` reducers —
-    stage 2 merges partials on keys alone.
-
-    ``aggs`` is a list of ``(out_name, column, fn)`` with fn one of
-    sum/count/min/max (re-aggregable partials; decompose avg into
-    sum+count at the call site).  The salt derives from a hash of the whole
-    row: no extra column needed, deterministic per row."""
-    FNS = {"sum": F.sum, "count": F.count, "min": F.min, "max": F.max}
-    MERGE = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
-    for _, _, fn in aggs:
-        if fn not in FNS:
-            raise ValueError(f"non-re-aggregable fn {fn!r}; use {sorted(FNS)}")
-    # project ONLY the involved columns (hashing every column would defeat
-    # column pruning); salt from a unique per-row id, NOT the row values —
-    # a hot key whose rows are identical would otherwise all hash to one
-    # bucket and never spread
-    needed = list(dict.fromkeys(keys + [c for _, c, _ in aggs]))
-    salted = df.select(*needed).withColumn(
-        "_salt", F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(salt_buckets))
-    )
-    stage1 = salted.groupBy(*keys, "_salt").agg(
-        *[FNS[fn](col).alias(f"_p_{name}") for name, col, fn in aggs]
-    )
-    return stage1.groupBy(*keys).agg(
-        *[MERGE[fn](f"_p_{name}").alias(name) for name, _, fn in aggs]
-    )
-
-
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-safe equi-join: salt the skewed side, replicate the small side
-    across every salt bucket, join on (key, salt).  Use when the small side
-    is too big to broadcast whole but each key's rows fit; for genuinely
-    small dims prefer ``F.broadcast``."""
-    s = skewed.withColumn(
-        "_salt", F.pmod(F.hash(F.col(key), F.monotonically_increasing_id()), F.lit(salt_buckets))
-    )
-    replicated = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    return s.join(replicated, [key, "_salt"]).drop("_salt")
 
 
 def write_bucketed(df: DataFrame, table_name: str, bucket_cols: list[str],

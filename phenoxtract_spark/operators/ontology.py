@@ -272,18 +272,6 @@ def http_search_transport(base_url: str, api_key: Optional[str] = None,
     return transport
 
 
-def resource_dim(spark: SparkSession, resources: list[dict]) -> DataFrame:
-    """X5 BioRegistry resource metadata as a static dimension
-    ``(prefix, name, url, version, iri_prefix)``."""
-    return spark.createDataFrame(
-        [
-            (r["prefix"], r.get("name"), r.get("url"), r.get("version"), r.get("iri_prefix"))
-            for r in resources
-        ],
-        schema="prefix string, name string, url string, version string, iri_prefix string",
-    )
-
-
 def distinct_resources_used(fact: DataFrame, curie_col: str) -> DataFrame:
     """G11 resource dedup (~ phenopacket_builder.rs:683-702): distinct
     case-insensitive CURIE prefixes appearing in a fact column."""
@@ -483,10 +471,3 @@ def fetch_and_cache_ontology(spark: SparkSession, url: str, cache_dir: str,
                 f"ontology fetch failed with {status} and no cached copy: {url}"
             )
     return ontology_factory(spark, doc_path, resource=resource, cache_dir=cache_dir)
-
-
-def labels_dim_from_terms(spark: SparkSession, terms: Iterable[OntologyTerm]) -> DataFrame:
-    """(id, label) rendering dimension from parsed terms."""
-    return spark.createDataFrame(
-        [(t.id, t.label) for t in terms], schema="id string, label string"
-    )

@@ -32,6 +32,8 @@ from ..functions.durations import is_iso8601_duration
 from ..plans import collectors
 
 SCHEMA_VERSION = "2.0"
+# metaData.created is fixed, so a render is byte-stable across runs
+CREATED = "1970-01-01T00:00:00Z"
 _TS_FMT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 
 
@@ -101,7 +103,6 @@ def render_packets_v2(
     cohort: Optional[str] = None,
     created_by: str = "phenoxtract-spark",
     submitted_by: Optional[str] = None,
-    created: str = "1970-01-01T00:00:00Z",
 ) -> DataFrame:
     """Render one Phenopacket v2 JSON document per subject.
     Returns (subject_id, packet_json)."""
@@ -555,7 +556,7 @@ def render_packets_v2(
     )
     meta = F.struct(
         F.lit(SCHEMA_VERSION).alias("phenopacketSchemaVersion"),
-        F.lit(created).alias("created"),
+        F.lit(CREATED).alias("created"),
         F.lit(created_by).alias("createdBy"),
         F.lit(submitted_by).cast("string").alias("submittedBy"),
         _nonempty("resources").alias("resources"),

@@ -55,6 +55,9 @@ def _linked_col(cdf: ContextualizedDataFrame, block: Optional[str], kind: Contex
     return hits[0] if hits else None
 
 
+# offender rows an eager multiplicity check collects into its error
+_ERROR_LIMIT = 5
+
 INDIVIDUAL_FIELDS = {
     "sex": ContextKind.SUBJECT_SEX,
     "date_of_birth": ContextKind.DATE_OF_BIRTH,
@@ -66,8 +69,7 @@ INDIVIDUAL_FIELDS = {
 }
 
 
-def collect_individual(cdfs: Sequence[ContextualizedDataFrame],
-                       error_limit: int = 5) -> DataFrame:
+def collect_individual(cdfs: Sequence[ContextualizedDataFrame]) -> DataFrame:
     """IndividualCollector (~ individual_collector.rs:21-98): sex, DOB,
     vital status, time at last encounter, cause of death, survival days —
     each a G3 single-multiplicity element across all tables.
@@ -107,7 +109,7 @@ def collect_individual(cdfs: Sequence[ContextualizedDataFrame],
         conflict = c if conflict is None else (conflict | c)
     bad = agg.filter(conflict).select(
         "subject_id", *[f"_s_{n}" for n in INDIVIDUAL_FIELDS]
-    ).limit(error_limit).collect()
+    ).limit(_ERROR_LIMIT).collect()
     if bad:
         detail = [
             (r["subject_id"], {n: sorted(r[f"_s_{n}"]) for n in INDIVIDUAL_FIELDS if len(r[f"_s_{n}"]) > 1})
@@ -460,8 +462,6 @@ def collect_medical_procedures(cdfs: Sequence[ContextualizedDataFrame]) -> Optio
 def collect_medical_treatments(
     cdfs: Sequence[ContextualizedDataFrame],
     ledger=None,
-    error_limit: int = 5,
-    strict: bool = True,
 ) -> Optional[DataFrame]:
     """MedicalTreatmentCollector (~ medical_treatment_collector.rs:106-152):
     per TreatmentAgent column, row-zip route-of-administration / drug-type /
@@ -534,18 +534,17 @@ def collect_medical_treatments(
             def d(name):
                 return F.col(name).cast("double") if name else F.lit(None).cast("double")
 
-            if strict:
-                others = [c for c in (route, drug, qval, qunit) if c]
-                if others:
-                    present = None
-                    for c in others:
-                        p = F.col(c).isNotNull()
-                        present = p if present is None else (present | p)
-                    bad_frames.append(
-                        cdf.df.filter(F.col(col).isNull() & present).select(
-                            _subject(cdf).alias("offender")
-                        )
+            others = [c for c in (route, drug, qval, qunit) if c]
+            if others:
+                present = None
+                for c in others:
+                    p = F.col(c).isNotNull()
+                    present = p if present is None else (present | p)
+                bad_frames.append(
+                    cdf.df.filter(F.col(col).isNull() & present).select(
+                        _subject(cdf).alias("offender")
                     )
+                )
             frames.append(
                 cdf.df.filter(F.col(col).isNotNull()).select(
                     _subject(cdf),
@@ -569,7 +568,7 @@ def collect_medical_treatments(
         if ledger is not None:
             ledger.add_check("treatment_agent_missing", bad)
         else:
-            rows = bad.limit(error_limit).collect()
+            rows = bad.limit(_ERROR_LIMIT).collect()
             if rows:
                 raise grouping.MultiplicityError(
                     "treatment values without an agent for subjects: "

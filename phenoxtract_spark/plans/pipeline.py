@@ -45,17 +45,12 @@ class Pipeline:
     strategies: list[Strategy] = field(default_factory=list)
     cohort: Optional[str] = None
     created_by: str = "phenoxtract-spark"
-    validate_subjects: bool = True
     # pass the same errors.ErrorLedger to strict strategies and here: their
     # offender probes then share ONE validation job, run after transform
     ledger: object = None
 
     def add_strategy(self, s: Strategy) -> "Pipeline":
         self.strategies.append(s)
-        return self
-
-    def insert_strategy(self, i: int, s: Strategy) -> "Pipeline":
-        self.strategies.insert(i, s)
         return self
 
     # -- stage 2: preprocess (~ preprocessor.rs:13-19) ----------------------
@@ -87,8 +82,7 @@ class Pipeline:
                     else:
                         df = casting.specific_cast(df, col, target)
             new = cdf.with_df(df)
-            if self.validate_subjects:
-                new.validate_subject_not_null()
+            new.validate_subject_not_null()
             out.append(new)
         return out
 

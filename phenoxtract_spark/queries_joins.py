@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .operators import joins, similarity
+from .operators import joins, similarity, skew
 from .queries_core import q, read_table, table_num_rows
 
 
@@ -79,23 +79,21 @@ def skew_salted(spark, sf_dir):
     """3-value grouping key = maximal skew; the salted two-stage plan keeps
     every reducer busy and must agree exactly with the plain GROUP BY."""
     li = read_table(spark, sf_dir, "lineitem")
-    out = joins.salted_agg(
+    out = skew.salted_agg(
         li,
         ["l_returnflag"],
-        [
-            ("sum_price", "l_extendedprice", "sum"),
-            ("n_items", "l_extendedprice", "count"),
-            ("min_price", "l_extendedprice", "min"),
-            ("max_price", "l_extendedprice", "max"),
-        ],
-        salt_buckets=8,
+        salt_on=["l_orderkey", "l_linenumber"],
+        buckets=8,
+        sums=["l_extendedprice"],
+        mins=["l_extendedprice"],
+        maxs=["l_extendedprice"],
     )
     return out.select(
         "l_returnflag",
-        F.round("sum_price", 2).alias("sum_price"),
-        "n_items",
-        F.round("min_price", 2).alias("min_price"),
-        F.round("max_price", 2).alias("max_price"),
+        F.round("sum_l_extendedprice", 2).alias("sum_price"),
+        F.col("cnt").alias("n_items"),
+        F.round("min_l_extendedprice", 2).alias("min_price"),
+        F.round("max_l_extendedprice", 2).alias("max_price"),
     )
 
 
@@ -109,8 +107,9 @@ def skew_salted(spark, sf_dir):
 def skew_salted_join(spark, sf_dir):
     li = read_table(spark, sf_dir, "lineitem").withColumnRenamed("l_orderkey", "k")
     o = read_table(spark, sf_dir, "orders").withColumnRenamed("o_orderkey", "k")
-    out = joins.salted_join(
-        li.select("k", "l_linenumber"), o.select("k", "o_orderstatus"), "k", salt_buckets=4
+    out = skew.salted_join(
+        li.select("k", "l_linenumber"), o.select("k", "o_orderstatus"), "k",
+        buckets=4, fact_salt_on=["l_linenumber"],
     )
     return out.select(F.col("k").alias("l_orderkey"), "l_linenumber", "o_orderstatus")
 

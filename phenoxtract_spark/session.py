@@ -17,7 +17,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state_store: bool = False,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-aware defaults.
 
@@ -26,6 +25,9 @@ def get_spark(
     - Arrow enabled: every pandas UDF / ``applyInPandas`` path transfers
       columnar batches instead of pickled rows.
     - ``shuffle_partitions`` is only the *initial* number; AQE coalesces.
+    - ``extra_conf`` sets anything else, e.g. large streaming state spills
+      to RocksDB with ``spark.sql.streaming.stateStore.providerClass`` =
+      ``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -64,13 +66,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
     )
-    if rocksdb_state_store:
-        # large streaming state (sessionization over many keys) should spill
-        # to RocksDB instead of the default in-memory HDFS-backed store
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

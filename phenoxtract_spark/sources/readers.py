@@ -72,9 +72,9 @@ def read_csv(spark: SparkSession, path: str, cfg: ExtractionConfig,
             .option("header", "false")
             .csv(path)
         )
-        raw = attach_ingest_rownum(raw)
-        rows = raw.orderBy(INGEST_ROWNUM).drop(INGEST_ROWNUM).collect()
-        vectors = [list(r) for r in rows]
+        # collect() concatenates partitions in index order, which is the
+        # file's row order (the same order zipWithIndex would number)
+        vectors = [list(r) for r in raw.collect()]
         df = vectors_to_df(spark, vectors, cfg.has_headers)
     else:
         df = (

@@ -25,13 +25,10 @@ def write_jsonl(packets: DataFrame, path: str, json_col: str = "packet_json",
     out.write.mode("overwrite").text(path)
 
 
-def write_file_per_subject(packets: DataFrame, out_dir: str,
-                           id_col: str = "subject_id",
-                           json_col: str = "packet_json",
-                           pretty: bool = True,
-                           drop_default_survival: bool = True) -> None:
-    """S6 faithful mode: one ``{id}.json`` per subject, pretty-printed;
-    drops default-zero ``survivalTimeInDays`` (~ file_system_loader.rs:31-98).
+def write_file_per_subject(packets: DataFrame, out_dir: str) -> None:
+    """S6 faithful mode: one ``{subject_id}.json`` per ``(subject_id,
+    packet_json)`` row, pretty-printed; drops default-zero
+    ``survivalTimeInDays`` (~ file_system_loader.rs:31-98).
     Executor-side ``foreachPartition`` — no driver collect."""
     os.makedirs(out_dir, exist_ok=True)
 
@@ -59,14 +56,12 @@ def write_file_per_subject(packets: DataFrame, out_dir: str,
 
     def write_part(rows):
         for row in rows:
-            obj = json.loads(row[json_col])
-            if drop_default_survival:
-                obj = _strip_default(obj)
-            fname = os.path.join(out_dir, f"{_safe_basename(row[id_col])}.json")
+            obj = _strip_default(json.loads(row["packet_json"]))
+            fname = os.path.join(out_dir, f"{_safe_basename(row['subject_id'])}.json")
             with open(fname, "w") as f:
-                json.dump(obj, f, indent=2 if pretty else None, sort_keys=False)
+                json.dump(obj, f, indent=2, sort_keys=False)
 
-    packets.select(id_col, json_col).foreachPartition(write_part)
+    packets.select("subject_id", "packet_json").foreachPartition(write_part)
 
 
 def write_parquet_partitioned(df: DataFrame, path: str, partition_cols: list[str],

@@ -388,7 +388,7 @@ def test_big_null_minimal_packets(spark, dims):
                time_type=TimeElementType.DATE, building_block_id="M2"),
         ],
     )
-    pipe = Pipeline(cohort="my_cohort", validate_subjects=True)
+    pipe = Pipeline(cohort="my_cohort")
     pipe.add_strategy(AliasMapStrategy())
     pipe.add_strategy(
         OntologyNormaliserStrategy(

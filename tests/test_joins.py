@@ -1,5 +1,5 @@
-"""Join toolbox: as-of join semantics, salted agg/join equivalence,
-bucketed-write plumbing."""
+"""Join toolbox: as-of join semantics, bucketed-write plumbing.  Salted
+agg/join equivalence is in test_skew_ops.py."""
 
 import pytest
 
@@ -32,41 +32,6 @@ def test_asof_join_tiebreak_highest_order_wins(spark):
     )
     out = joins.as_of_join(left, right, ["uid"], "ts", "ts", ["v"], right_order="eid")
     assert out.collect()[0]["asof_v"] == 2.0
-
-
-def test_salted_agg_matches_plain(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    plain = {
-        r["l_returnflag"]: (r["s"], r["n"])
-        for r in li.groupBy("l_returnflag")
-        .agg(F.sum("l_quantity").alias("s"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    salted = {
-        r["l_returnflag"]: (r["s"], r["n"])
-        for r in joins.salted_agg(
-            li, ["l_returnflag"], [("s", "l_quantity", "sum"), ("n", "l_quantity", "count")]
-        ).collect()
-    }
-    assert plain == salted
-
-
-def test_salted_agg_rejects_avg(spark):
-    df = spark.createDataFrame([("a", 1)], "k string, v int")
-    with pytest.raises(ValueError):
-        joins.salted_agg(df, ["k"], [("m", "v", "avg")])
-
-
-def test_salted_join_matches_plain(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        F.col("l_orderkey").alias("k"), "l_linenumber"
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.col("o_orderkey").alias("k"), "o_orderstatus"
-    )
-    plain = li.join(o, "k").count()
-    salted = joins.salted_join(li, o, "k", salt_buckets=4).count()
-    assert plain == salted
 
 
 def test_write_bucketed_roundtrip(spark, tmp_path):

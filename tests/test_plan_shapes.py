@@ -224,6 +224,24 @@ def test_salted_join_plans_shuffle_hash_not_smj(spark, registry):
     assert "__pxs_salt" in plan  # the salt is IN the join key
 
 
+@pytest.mark.parametrize("name", ["skew_salted_agg", "skew_salted_join"])
+def test_salted_queries_use_deterministic_row_salt(spark, registry, name):
+    """Salting has one implementation, operators/skew.py: the salt is
+    ``row_salt``'s xxhash64 of row columns, so a recomputed or retried
+    task re-derives the same salt.  A salt drawn from
+    ``monotonically_increasing_id()`` depends on the partition layout."""
+    plan = (
+        registry[name](spark, SF)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "monotonically_increasing_id" not in plan
+    assert "xxhash64" in plan
+    if name == "skew_salted_join":
+        # the salt only spreads the probe side if the join is shuffled
+        assert "ShuffledHashJoin" in plan
+        assert "BroadcastHashJoin" not in plan
+
+
 def test_substring_anchor_join_never_broadcasts(spark, registry):
     """The anchors relation is data-sized; after localCheckpoint its
     stats are bogus-small (measured 1.8 MB for 13.2M rows) and an

@@ -49,6 +49,30 @@ def test_csv_scan_transposed(spark, tmp_path):
     assert rows == {"P1": "true", "P2": "false"}
 
 
+def test_csv_scan_transposed_keeps_file_order_across_splits(spark, tmp_path):
+    # each file row becomes an output column: a file read as several input
+    # splits must still yield the columns (and patients) in file order
+    p = tmp_path / "wide.csv"
+    n_rows, patients = 200, ["P3", "P1", "P2"]
+    lines = ["Patient ID," + ",".join(patients)]
+    lines += [f"field_{i:03d}," + ",".join(f"v{i}_{s}" for s in patients)
+              for i in range(n_rows)]
+    p.write_text("\n".join(lines) + "\n")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        assert spark.read.csv(str(p)).rdd.getNumPartitions() >= 2
+        cfg = readers.ExtractionConfig(name="t", has_headers=True, patients_are_rows=False)
+        df = readers.read_csv(spark, str(p), cfg)
+    finally:
+        spark.conf.set(key, old)
+    assert df.columns == ["Patient ID"] + [f"field_{i:03d}" for i in range(n_rows)]
+    got = df.collect()
+    assert [r["Patient ID"] for r in got] == patients
+    assert [r["field_137"] for r in got] == [f"v137_{s}" for s in patients]
+
+
 def test_config_loader_env_expansion(tmp_path, monkeypatch):
     monkeypatch.setenv("PXS_TEST_NAME", "cohort42")
     p = tmp_path / "cfg.json"
