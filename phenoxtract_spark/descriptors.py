@@ -269,13 +269,13 @@ class ContextualizedDataFrame:
     def resolved(self) -> dict[str, SeriesContext]:
         return self.context.resolve(self.df.columns)
 
-    def validate_subject_not_null(self, limit: int = 5) -> None:
-        """Distributed V1 check: no nulls in the subject column.  Bounded
-        ``limit`` keeps the error path cheap at 100 TB."""
+    def validate_subject_not_null(self) -> None:
+        """Distributed V1 check: no nulls in the subject column.  The probe
+        stops at 5 nulls, so the error path stays cheap at 100 TB."""
         from pyspark.sql import functions as F
 
         subj = self.subject_col
-        bad = self.df.filter(F.col(subj).isNull()).limit(limit).count()
+        bad = self.df.filter(F.col(subj).isNull()).limit(5).count()
         if bad:
             raise ValidationError(
                 f"table {self.context.name!r}: subject column {subj!r} contains nulls"

@@ -25,14 +25,10 @@ DATE_FORMATS = [
     "dd.MM.yyyy",
     "d.M.yyyy",  # single-digit day/month variant ('21.1.2026')
 ]
-DATETIME_FORMATS = [
-    "yyyy-MM-dd HH:mm:ss",
-    "yyyy-MM-dd'T'HH:mm:ss",
-    "yyyy-MM-dd'T'HH:mm:ssXXX",
-    "yyyy-MM-dd HH:mm:ss.SSS",
-    "yyyy-MM-dd'T'HH:mm:ss.SSS",
-    "yyyy/MM/dd HH:mm:ss",
-]
+# ISO 8601 datetimes (any of yyyy-MM-dd[ T]HH:mm[:ss[.S…]][zone]) go through
+# Spark's own string → timestamp cast, on cells that start with yyyy-M.
+DATETIME_FORMATS = ["yyyy/MM/dd HH:mm:ss"]
+ISO_PREFIX_RX = r"^\d{4}-\d{1,2}"
 BARE_YEAR_RX = r"^\d{4}$"
 
 
@@ -57,11 +53,13 @@ def parse_date_multi(col: Column | str) -> Column:
 
 
 def parse_datetime_multi(col: Column | str) -> Column:
-    """C8: first-success datetime parse; bare year → Jan 1 midnight."""
+    """C8: first-success datetime parse; bare year → Jan 1 midnight.  The
+    ISO cast is guarded by its prefix: on a bare time of day it would fill
+    in today's date."""
     c = _c(col)
     attempts = [F.try_to_timestamp(c, F.lit(f)) for f in DATETIME_FORMATS]
-    date_fallback = parse_date_multi(c).cast("timestamp")
-    return F.coalesce(*attempts, date_fallback)
+    iso = F.when(c.rlike(ISO_PREFIX_RX), try_cast(c, "timestamp"))
+    return F.coalesce(*attempts, iso, parse_date_multi(c).cast("timestamp"))
 
 
 def parse_bool(col: Column | str) -> Column:
@@ -77,10 +75,21 @@ def parse_bool(col: Column | str) -> Column:
 
 
 def parse_int_via_float(col: Column | str) -> Column:
-    """C6: '1.0' → 1 (string → double → bigint iff integral)."""
+    """C6: '1.0' → 1.  Integral numerals cast to bigint exactly: integer
+    literals directly (null when out of range), others through the double
+    only below 2^53, where a double holds every integer exactly.  The
+    double is tested first, so non-numeric cells skip the bigint cast."""
     c = _c(col)
     d = try_cast(c, "double")
-    return F.when((d == F.floor(d)) & d.isNotNull(), d.cast("bigint"))
+    via_double = F.when(F.abs(d) < F.lit(float(2**53)), d.cast("bigint"))
+    return F.when(is_integral_double(d), F.coalesce(try_cast(c, "bigint"), via_double))
+
+
+def parse_wide_int(col: Column | str) -> Column:
+    """Integer literals of up to 38 digits → decimal(38,0), exactly (C3's
+    stage for integer columns too wide for bigint)."""
+    c = _c(col)
+    return F.when(c.rlike(r"^[+-]?\d{1,38}$"), try_cast(c, "decimal(38,0)"))
 
 
 def is_integral_double(col: Column | str) -> Column:
@@ -98,14 +107,14 @@ def is_integral_double(col: Column | str) -> Column:
 def castability_stats(df: DataFrame, columns: list[str]) -> dict[str, dict[str, int]]:
     """Two-phase aggregation over all candidate columns, driving the
     driver-side decision for C2 (integral promotion) and C3 (ambivalent cast
-    priority bool→int→float→date→datetime).
+    priority bool→int→decimal→float→date→datetime).
 
-    Phase 1 (cheap: casts only) counts non-null / bool / int / float
-    survivors.  Phase 2 runs the expensive multi-format date/datetime parse
-    chains ONLY for string columns still undecided after phase 1 — numeric
-    and boolean columns never pay for six ``try_to_timestamp`` attempts.
-    Both phases are single jobs; at 100 TB run them on a sample and keep a
-    strict ``try_cast`` validation in the cast projection."""
+    Phase 1 (cheap: casts only) counts non-null / bool / int / decimal /
+    float survivors.  Phase 2 runs the expensive multi-format date/datetime
+    parse chains ONLY for string columns still undecided after phase 1 —
+    numeric and boolean columns never pay for six ``try_to_timestamp``
+    attempts.  Both phases are single jobs; at 100 TB run them on a sample
+    and keep a strict ``try_cast`` validation in the cast projection."""
     # the parse chains are expensive per ROW, so a small input packed into
     # 1-2 scan splits serializes them (a few MB of parquet = one split, but
     # six try_to_timestamp chains × rows is seconds of CPU).  Fan the stats
@@ -131,19 +140,20 @@ def castability_stats(df: DataFrame, columns: list[str]) -> dict[str, dict[str, 
                 F.count(F.when(F.lower(s).isin("true", "false"), 1)).alias(f"{col}__bool")
             )
             aggs.append(F.count(parse_int_via_float(s)).alias(f"{col}__int"))
+            aggs.append(F.count(parse_wide_int(s)).alias(f"{col}__decimal"))
             aggs.append(F.count(try_cast(s, "double")).alias(f"{col}__float"))
     row = df.agg(*aggs).collect()[0].asDict()
     out: dict[str, dict[str, int]] = {}
     for k, v in row.items():
         col, stat = k.rsplit("__", 1)
         out.setdefault(col, {})[stat] = v
-    # phase 2: date/datetime counts only where bool/int/float didn't decide
+    # phase 2: date/datetime counts only where bool/int/decimal/float didn't decide
     undecided = [
         col
         for col in columns
         if dtypes[col] == "string"
         and out[col].get("n", 0) > 0
-        and not any(out[col].get(t, -1) == out[col]["n"] for t in ("bool", "int", "float"))
+        and not any(out[col].get(t, -1) == out[col]["n"] for t in ("bool", "int", "decimal", "float"))
     ]
     if undecided:
         aggs2: list[Column] = []
@@ -158,10 +168,11 @@ def castability_stats(df: DataFrame, columns: list[str]) -> dict[str, dict[str, 
     return out
 
 
-PRIORITY = ["bool", "int", "float", "date", "datetime"]
+PRIORITY = ["bool", "int", "decimal", "float", "date", "datetime"]
 _CAST_EXPRS = {
     "bool": parse_bool,
     "int": parse_int_via_float,
+    "decimal": parse_wide_int,
     "float": lambda c: try_cast(_c(c), "double"),
     "date": parse_date_multi,
     "datetime": parse_datetime_multi,
@@ -180,7 +191,6 @@ def decide_ambivalent(stats: dict[str, int]) -> str | None:
 
 
 def ambivalent_cast(df: DataFrame, columns: list[str] | None = None,
-                    stats: dict[str, dict[str, int]] | None = None,
                     sample_fraction: float | None = None) -> DataFrame:
     """C3 over string columns + C2 over float/int32 columns, as one stats
     pass + one projection.
@@ -195,9 +205,8 @@ def ambivalent_cast(df: DataFrame, columns: list[str] | None = None,
         columns = [c for c, t in dtypes.items() if t in ("string", "double", "float", "int")]
     if not columns:
         return df
-    if stats is None:
-        stats_src = df.sample(sample_fraction, seed=7) if sample_fraction else df
-        stats = castability_stats(stats_src, columns)
+    stats_src = df.sample(sample_fraction, seed=7) if sample_fraction else df
+    stats = castability_stats(stats_src, columns)
     exprs = []
     for col in df.columns:
         if col not in columns:
@@ -248,14 +257,14 @@ def specific_cast_expr(col: Column | str, target: str) -> Column:
     return _SPECIFIC[target](col)
 
 
-def specific_cast(df: DataFrame, column: str, target: str, limit: int = 20) -> DataFrame:
+def specific_cast(df: DataFrame, column: str, target: str) -> DataFrame:
     """C4: cast ``column`` to ``target`` (OutputDataType value); error listing
-    up to ``limit`` offending raw values (V6 exhaustive-but-bounded)."""
+    up to 20 offending raw values (V6 exhaustive-but-bounded)."""
     casted = specific_cast_expr(F.col(column), target)
     bad = (
         df.filter(F.col(column).isNotNull() & casted.isNull())
         .select(column)
-        .limit(limit)
+        .limit(20)
         .collect()
     )
     if bad:

@@ -13,6 +13,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+#: Offending subjects/rows a failed check reports.
+_ERROR_LIMIT = 5
+
+
 class MultiplicityError(ValueError):
     pass
 
@@ -21,7 +25,6 @@ def single_valued(
     frames: list[tuple[DataFrame, str, str]],
     alias: str = "value",
     strict: bool = True,
-    error_limit: int = 5,
 ) -> DataFrame:
     """G3 (~ collecting/utils.rs:29-71): across tables/columns, each subject
     must have ≤1 distinct non-null value.  ``frames`` is a list of
@@ -43,7 +46,7 @@ def single_valued(
         unioned = unioned.unionByName(p)
     agg = unioned.groupBy("subject_id").agg(F.collect_set("_v").alias("_vals"))
     if strict:
-        bad = agg.filter(F.size("_vals") > 1).limit(error_limit).collect()
+        bad = agg.filter(F.size("_vals") > 1).limit(_ERROR_LIMIT).collect()
         if bad:
             raise MultiplicityError(
                 f"multiple distinct values for subjects: "
@@ -90,7 +93,6 @@ def header_hpo_collapse(
     subject: str,
     hpo_columns: list[str],
     onset_column: str | None = None,
-    error_limit: int = 5,
 ) -> DataFrame:
     """G7 (~ hpo_in_header_collector.rs:22-84): observation-status columns
     named by HPO id.  Unpivot → per (subject, hpo) the distinct
@@ -125,7 +127,7 @@ def header_hpo_collapse(
         "_pairs",
         F.when(F.size("_obs_pairs") > 0, F.col("_obs_pairs")).otherwise(F.col("_all_pairs")),
     )
-    bad = agg.filter(F.size("_obs_pairs") > 1).limit(error_limit).collect()
+    bad = agg.filter(F.size("_obs_pairs") > 1).limit(_ERROR_LIMIT).collect()
     if bad:
         raise MultiplicityError(
             f"conflicting observation-status pairs: "
@@ -144,8 +146,7 @@ def header_hpo_collapse(
     )
 
 
-def require_anchor(df: DataFrame, anchor: str, dependents: list[str],
-                   error_limit: int = 5) -> DataFrame:
+def require_anchor(df: DataFrame, anchor: str, dependents: list[str]) -> DataFrame:
     """G12 (~ medical_actions/quantity_data.rs:93-146): dependent fields
     present without the anchor → error; rows with null anchor and null
     dependents are silently skipped."""
@@ -156,7 +157,7 @@ def require_anchor(df: DataFrame, anchor: str, dependents: list[str],
     bad = (
         df.filter(F.col(anchor).isNull() & dep_present)
         .select(anchor, *dependents)
-        .limit(error_limit)
+        .limit(_ERROR_LIMIT)
         .collect()
     )
     if bad:

@@ -30,6 +30,11 @@ VITAL_STATUS_MAP = {
     "unknown": "UNKNOWN_STATUS", "na": "UNKNOWN_STATUS",
 }
 
+#: Distinct unmapped values a failed strict check reports.
+_ERROR_LIMIT = 20
+#: Cells already shaped like a CURIE pass ontology normalisation untouched.
+_CURIE_RX = r"^[A-Za-z]+:\d+$"
+
 
 class UnmappedValueError(ValueError):
     """Exhaustive-but-bounded report of unmapped values with suggestions."""
@@ -65,7 +70,6 @@ def apply_synonym_mapping(
     column: str,
     dim: DataFrame,
     strict: bool = True,
-    error_limit: int = 20,
     out_col: str | None = None,
     ledger=None,
 ) -> DataFrame:
@@ -91,7 +95,7 @@ def apply_synonym_mapping(
             joined.filter(F.col(column).isNotNull() & F.col("_mapped").isNull())
             .select(column)
             .distinct()
-            .limit(error_limit)
+            .limit(_ERROR_LIMIT)
             .collect()
         )
         if bad_rows:
@@ -127,18 +131,14 @@ def normalize_to_ontology(
     df: DataFrame,
     column: str,
     ontology_dim: DataFrame,
-    id_pattern: str = r"^[A-Za-z]+:\d+$",
     strict: bool = True,
-    error_limit: int = 20,
-    out_col: str | None = None,
     ledger=None,
 ) -> DataFrame:
     """M3 (~ ontology_normaliser.rs:75-141): label-or-synonym → canonical id
     via a broadcast ontology dimension ``(key, id)`` (key already lowercased
     label or synonym).  CURIE-shaped cells pass through untouched.
     ``ledger`` defers the strict check into one shared validation job."""
-    out_col = out_col or column
-    is_id = F.col(column).rlike(id_pattern)
+    is_id = F.col(column).rlike(_CURIE_RX)
     keyed = df.withColumn("_k", F.when(~is_id, normalize_key(F.col(column))))
     dim = F.broadcast(ontology_dim.select(normalize_key("key").alias("_k"), F.col("id").alias("_id")))
     joined = keyed.join(dim, "_k", "left")
@@ -151,12 +151,12 @@ def normalize_to_ontology(
     elif strict:
         bad = (
             joined.filter(F.col(column).isNotNull() & ~is_id & F.col("_id").isNull())
-            .select(column).distinct().limit(error_limit).collect()
+            .select(column).distinct().limit(_ERROR_LIMIT).collect()
         )
         if bad:
             raise UnmappedValueError(column, [(r[0], []) for r in bad])
     expr = F.when(is_id, F.col(column).cast("string")).otherwise(F.col("_id"))
-    return joined.withColumn(out_col, expr).drop("_k", "_id")
+    return joined.withColumn(column, expr).drop("_k", "_id")
 
 
 def split_by_membership(

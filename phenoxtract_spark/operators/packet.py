@@ -56,16 +56,15 @@ def assemble_packets(
     return out.select(F.col("subject_id"), packet.alias("packet"))
 
 
-def packets_to_json(packets: DataFrame, packet_col: str = "packet",
-                    ignore_null_fields: bool = True) -> DataFrame:
-    """Serialize packet structs to JSON strings (sharded-JSONL-friendly).
+def packets_to_json(packets: DataFrame, ignore_null_fields: bool = True) -> DataFrame:
+    """Serialize the ``packet`` structs to JSON strings (sharded-JSONL-friendly).
     ``ignore_null_fields=False`` renders nulls explicitly — the
     cross-engine-canonical form (DuckDB ``json_object`` keeps nulls), used
     by the oracle-checked packet queries."""
     return packets.select(
         "subject_id",
         F.to_json(
-            F.col(packet_col),
+            F.col("packet"),
             {"ignoreNullFields": "true" if ignore_null_fields else "false"},
         ).alias("packet_json"),
     )

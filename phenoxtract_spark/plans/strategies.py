@@ -384,12 +384,12 @@ class MultiHpoColExpansionStrategy(Strategy):
                 from ..sources.readers import INGEST_ROWNUM
 
                 row_ord = (
-                    F.col(INGEST_ROWNUM).cast("string")
+                    F.col(INGEST_ROWNUM)
                     if INGEST_ROWNUM in df.columns
-                    else F.col(subj).cast("string")
+                    else F.lpad(F.col(subj).cast("string"), 12, "0")
                 )
                 occurrences = df.select(
-                    F.lpad(row_ord, 12, "0").alias("_ro"),
+                    row_ord.alias("_ro"),
                     F.posexplode(extract_hpo_ids(F.col(col))).alias("_p", "_id"),
                 ).filter(F.col("_id").isNotNull())
                 key_order = [

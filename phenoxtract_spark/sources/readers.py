@@ -35,26 +35,24 @@ INGEST_ROWNUM = "_ingest_rownum"
 
 
 def attach_ingest_rownum(df: DataFrame) -> DataFrame:
-    """Attach a stable file-row-order column ``_ingest_rownum``.
+    """Attach a file-row-order column ``_ingest_rownum``.
 
-    ``zipWithIndex`` numbers rows in partition order; for file-based sources
-    the input splits (and therefore the numbering) are deterministic across
-    runs, which ``monotonically_increasing_id`` is not (it changes under
-    AQE/repartition/task retry).  Used by collectors that need the
-    reference's last-ROW-wins upsert semantics (builder.rs upserts)."""
-    from pyspark.sql import types as T
+    ``monotonically_increasing_id`` is a JVM expression; attached at the
+    scan, before any exchange, its values increase in (input split,
+    position in split) order, i.e. file row order, and depend only on the
+    file splits.  The values jump between splits, so callers may only
+    compare them, never read them: the collectors' last-ROW-wins upserts
+    (builder.rs upserts) and the multi-HPO key order sort by this column."""
+    from pyspark.sql import functions as F
 
-    schema = T.StructType(
-        df.schema.fields + [T.StructField(INGEST_ROWNUM, T.LongType(), False)]
-    )
-    rdd = df.rdd.zipWithIndex().map(lambda t: (*t[0], t[1]))
-    return df.sparkSession.createDataFrame(rdd, schema)
+    return df.withColumn(INGEST_ROWNUM, F.monotonically_increasing_id())
 
 
 def read_csv(spark: SparkSession, path: str, cfg: ExtractionConfig,
              attach_rownum: bool = False) -> DataFrame:
     """S1 (~ extract/data_source.rs:82-128): CSV scan with separator/header
-    options + schema inference; headerless → synthetic names (S4).
+    options; headerless → synthetic names (S4).  Every column arrives as a
+    string: ``Pipeline.preprocess`` alone decides column types (C3).
 
     ``patients_are_rows=False`` (S3) loads vectors from ROWS like the
     reference's loading-vector transpose: each file row becomes an output
@@ -64,25 +62,16 @@ def read_csv(spark: SparkSession, path: str, cfg: ExtractionConfig,
     tables are config-scale cohort spreadsheets by definition; 100 TB data
     arrives patients-are-rows.
 
-    ``attach_rownum`` adds the stable ingest-order column
+    ``attach_rownum`` adds the ingest-order column
     (see :func:`attach_ingest_rownum`)."""
+    reader = spark.read.option("sep", cfg.separator)
     if not cfg.patients_are_rows:
-        raw = (
-            spark.read.option("sep", cfg.separator)
-            .option("header", "false")
-            .csv(path)
-        )
         # collect() concatenates partitions in index order, which is the
-        # file's row order (the same order zipWithIndex would number)
-        vectors = [list(r) for r in raw.collect()]
+        # file's row order
+        vectors = [list(r) for r in reader.option("header", "false").csv(path).collect()]
         df = vectors_to_df(spark, vectors, cfg.has_headers)
     else:
-        df = (
-            spark.read.option("sep", cfg.separator)
-            .option("header", str(cfg.has_headers).lower())
-            .option("inferSchema", "true")
-            .csv(path)
-        )
+        df = reader.option("header", str(cfg.has_headers).lower()).csv(path)
         if not cfg.has_headers:
             df = df.toDF(*default_column_names(len(df.columns)))
     if attach_rownum:

@@ -16,10 +16,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_jsonl(packets: DataFrame, path: str, json_col: str = "packet_json",
-                num_shards: int | None = None) -> None:
-    """Scale path: sharded JSONL of packet JSON strings."""
-    out = packets.select(json_col)
+def write_jsonl(packets: DataFrame, path: str, num_shards: int | None = None) -> None:
+    """Scale path: sharded JSONL of the ``packet_json`` strings."""
+    out = packets.select("packet_json")
     if num_shards:
         out = out.repartition(num_shards)
     out.write.mode("overwrite").text(path)

@@ -161,6 +161,26 @@ def test_f3_multi_hpo_expansion(spark):
     assert "phenotypic_features" not in out["P002"] or out["P002"]["phenotypic_features"] == []
 
 
+def test_multi_hpo_key_order_follows_wide_ingest_rownums(spark):
+    # ingest row numbers jump by 2^33 per input split, so they can pass 12
+    # digits; pivot columns still follow row order, not subject or id order
+    from phenoxtract_spark.sources.readers import INGEST_ROWNUM
+
+    df = spark.createDataFrame(
+        [("P2", "HP:0000002", 999_999_999_999), ("P1", "HP:0000001", 1_000_000_000_000)],
+        f"sid string, HPOs string, {INGEST_ROWNUM} bigint",
+    )
+    ctx = TableContext(
+        name="multi",
+        series_contexts=[
+            sc("sid", ContextKind.SUBJECT_ID),
+            sc("HPOs", ContextKind.MULTI_HPO_ID),
+        ],
+    )
+    [out] = MultiHpoColExpansionStrategy().apply([ContextualizedDataFrame(df=df, context=ctx)])
+    assert [c for c in out.df.columns if c.startswith("HP:")] == ["HP:0000002", "HP:0000001"]
+
+
 def test_individual_fields_and_mapping_strategy(spark):
     demo = spark.createDataFrame(
         [

@@ -16,6 +16,7 @@ from phenoxtract_spark.descriptors import (
     SeriesContext,
     TableContext,
 )
+from phenoxtract_spark.functions import casting
 from phenoxtract_spark.operators import identify, interpret
 from phenoxtract_spark.sources import readers, sinks
 
@@ -27,7 +28,41 @@ def test_csv_scan_with_headers(spark, tmp_path):
     df = readers.read_csv(spark, str(p), cfg)
     assert df.columns == ["sid", "age"]
     assert df.count() == 2
-    assert dict(df.dtypes)["age"] == "int"  # inferSchema
+    # the reader types nothing; preprocess's C3 pass decides alone
+    assert dict(df.dtypes)["age"] == "string"
+    assert dict(casting.ambivalent_cast(df).dtypes)["age"] == "bigint"
+
+
+def test_csv_scan_then_preprocess_keeps_wide_ints_and_iso_timestamps(spark, tmp_path):
+    # the reader returns strings, so preprocess alone types these columns:
+    # integers stay exact past 2^53 and past bigint, ISO timestamps without
+    # seconds or with millis and a zone are timestamps, times of day stay text
+    from phenoxtract_spark.plans.pipeline import Pipeline
+
+    p = tmp_path / "ids.csv"
+    p.write_text(
+        "sid,n,wide,seen,at,clock\n"
+        "12345678901234567,12345678901234567,123456789012345678901,"
+        "2020-01-15T10:30:00.123Z,2020-01-15 10:30,10:30:00\n"
+        "2,9007199254740993,1,2021-02-01T00:00:00.000Z,2021-02-01 00:00,11:00:00\n"
+    )
+    df = readers.read_csv(spark, str(p), readers.ExtractionConfig(name="t"))
+    ctx = TableContext(
+        name="t",
+        series_contexts=[
+            SeriesContext(identifier=Identifier.of("sid"),
+                          data_context=Context(ContextKind.SUBJECT_ID)),
+        ],
+    )
+    [out] = Pipeline().preprocess([ContextualizedDataFrame(df=df, context=ctx)])
+    dtypes = dict(out.df.dtypes)
+    assert (dtypes["sid"], dtypes["n"], dtypes["wide"]) == ("string", "bigint", "decimal(38,0)")
+    assert (dtypes["seen"], dtypes["at"], dtypes["clock"]) == ("timestamp", "timestamp", "string")
+    rows = out.df.orderBy("n").collect()
+    assert [r["sid"] for r in rows] == ["2", "12345678901234567"]
+    assert [r["n"] for r in rows] == [9007199254740993, 12345678901234567]
+    assert [str(r["wide"]) for r in rows] == ["1", "123456789012345678901"]
+    assert str(rows[1]["at"]) == "2020-01-15 10:30:00"
 
 
 def test_csv_scan_headerless_default_names(spark, tmp_path):
@@ -71,6 +106,28 @@ def test_csv_scan_transposed_keeps_file_order_across_splits(spark, tmp_path):
     got = df.collect()
     assert [r["Patient ID"] for r in got] == patients
     assert [r["field_137"] for r in got] == [f"v137_{s}" for s in patients]
+
+
+def test_csv_scan_rownum_keeps_file_order_across_splits(spark, tmp_path):
+    # patients are rows: the ingest row number is a JVM expression on the
+    # file scan, and sorting by it gives file order across input splits
+    p = tmp_path / "long.csv"
+    sids = [f"P{(i * 7919) % 1000:04d}" for i in range(300)]
+    p.write_text("sid,v\n" + "".join(f"{s},{i}\n" for i, s in enumerate(sids)))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        cfg = readers.ExtractionConfig(name="t")
+        df = readers.read_csv(spark, str(p), cfg, attach_rownum=True)
+        assert df.rdd.getNumPartitions() >= 2
+        got = [r["sid"] for r in df.orderBy(readers.INGEST_ROWNUM).collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert got == sids
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    names = [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+    assert names == ["LogicalRelation"], names
 
 
 def test_config_loader_env_expansion(tmp_path, monkeypatch):
