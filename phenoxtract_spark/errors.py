@@ -1,29 +1,30 @@
-"""Deferred error ledger (V6 at scale; SURVEY §7.3 "error accumulation").
+"""Deferred error ledger (V6 at scale; SURVEY §7.3; ~ transform/error.rs:16-60).
 
-Strict-mode strategies each trigger an eager validation action — one extra
-bounded scan per strategy.  At 100 TB a pipeline with six strict strategies
-pays six scans.  The ledger batches them: every check registers a *small*
-DataFrame of offending examples (already limited at registration), the
-checks union into ONE job, and ``validate()`` raises a single combined
-report listing every failing check.
+A run fails once, listing every offender.  The ``Pipeline`` owns one ledger:
+preprocess casts and strict strategies register a small lazy DataFrame of
+offenders on it, and ``Pipeline.transform`` validates right after its
+barrier — ONE job, one combined :class:`PipelineValidationError`::
 
-Usage::
+    pipe = Pipeline(strategies=[MappingStrategy(spark, kind, SEX_MAP)])
+    cdfs = pipe.preprocess(cdfs)   # uncastable:… registered, no action
+    cdfs = pipe.transform(cdfs)    # unmapped:… registered; ONE validation job
 
-    ledger = ErrorLedger(limit_per_check=20)
-    ledger.add_check("sex_unmapped", bad_rows_df)      # lazy, no action
-    ledger.add_check("dob_conflicts", conflict_df)
-    ledger.validate()                                   # ONE Spark action
-
-Each registered DataFrame must be cheap per-row (already filtered to
-offenders); the ledger adds the limit, a check-name tag, and the union.
+:func:`strict_check` is the one place a check picks its mode: a standalone
+operator call has no ledger, so it probes now and raises the operator's
+typed error (``UnmappedValueError``, ``CastError``, ``MultiplicityError``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
+from typing import Callable, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+
+#: Offender examples a deferred check reports.
+LIMIT_PER_CHECK = 20
 
 
 class PipelineValidationError(ValueError):
@@ -35,30 +36,23 @@ class PipelineValidationError(ValueError):
 
 @dataclass
 class ErrorLedger:
-    limit_per_check: int = 20
-    _checks: list[tuple[str, DataFrame]] = field(default_factory=list)
+    _checks: list[DataFrame] = field(default_factory=list)
 
-    def add_check(self, name: str, offenders: DataFrame, value_col: str | None = None) -> "ErrorLedger":
-        """Register a lazy DataFrame of offending rows.  ``value_col``
-        selects the column to report (default: first column)."""
-        col = value_col or offenders.columns[0]
+    def add_check(self, name: str, offenders: DataFrame) -> None:
+        """Register a lazy DataFrame of offending rows (first column reported)."""
         tagged = (
-            offenders.select(F.col(col).cast("string").alias("offender"))
-            .limit(self.limit_per_check)
+            offenders.select(F.col(offenders.columns[0]).cast("string").alias("offender"))
+            .limit(LIMIT_PER_CHECK)
             .select(F.lit(name).alias("check"), "offender")
         )
-        self._checks.append((name, tagged))
-        return self
+        self._checks.append(tagged)
 
     def validate(self) -> None:
         """Run every registered check in ONE action; raise a combined report
         if any offenders exist.  No-op when nothing registered."""
         if not self._checks:
             return
-        unioned = self._checks[0][1]
-        for _, df in self._checks[1:]:
-            unioned = unioned.unionByName(df)
-        rows = unioned.collect()
+        rows = reduce(DataFrame.unionByName, self._checks).collect()
         self._checks.clear()
         if not rows:
             return
@@ -66,3 +60,17 @@ class ErrorLedger:
         for r in rows:
             failures.setdefault(r["check"], []).append(r["offender"])
         raise PipelineValidationError(failures)
+
+
+def strict_check(ledger: Optional[ErrorLedger], name: str, offenders: DataFrame,
+                 error: Callable[[list[Row]], Exception], limit: int = LIMIT_PER_CHECK) -> None:
+    """One strict check in either mode.  ``offenders`` is a lazy frame of
+    offending rows, first column = the reported value.  With a ``ledger``
+    it is registered as check ``name`` (no action); without one, up to
+    ``limit`` rows are fetched now and ``error(rows)`` is raised if any."""
+    if ledger is not None:
+        ledger.add_check(name, offenders)
+        return
+    rows = offenders.limit(limit).collect()
+    if rows:
+        raise error(rows)

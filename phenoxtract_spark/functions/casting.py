@@ -15,6 +15,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..errors import strict_check
+
 # Multi-format date/datetime parse chains (C7/C8; ~ constants.rs:3-20,
 # transform/data_processing/parsing.rs:23-60).  Spark datetime patterns.
 DATE_FORMATS = [
@@ -257,18 +259,17 @@ def specific_cast_expr(col: Column | str, target: str) -> Column:
     return _SPECIFIC[target](col)
 
 
-def specific_cast(df: DataFrame, column: str, target: str) -> DataFrame:
+def specific_cast(df: DataFrame, column: str, target: str, ledger=None) -> DataFrame:
     """C4: cast ``column`` to ``target`` (OutputDataType value); error listing
-    up to 20 offending raw values (V6 exhaustive-but-bounded)."""
+    up to 20 distinct offending raw values (V6 exhaustive-but-bounded) —
+    check ``uncastable:<column>→<target>`` on a ``ledger``, see
+    errors.strict_check."""
     casted = specific_cast_expr(F.col(column), target)
-    bad = (
-        df.filter(F.col(column).isNotNull() & casted.isNull())
-        .select(column)
-        .limit(20)
-        .collect()
+    strict_check(
+        ledger, f"uncastable:{column}→{target}",
+        df.filter(F.col(column).isNotNull() & casted.isNull()).select(column).distinct(),
+        lambda bad: CastError(column, target, [r[0] for r in bad]),
     )
-    if bad:
-        raise CastError(column, target, [r[0] for r in bad])
     return df.withColumn(column, casted)
 
 

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..errors import strict_check
+
 
 #: Offending subjects/rows a failed check reports.
 _ERROR_LIMIT = 5
@@ -25,11 +27,13 @@ def single_valued(
     frames: list[tuple[DataFrame, str, str]],
     alias: str = "value",
     strict: bool = True,
+    ledger=None,
 ) -> DataFrame:
     """G3 (~ collecting/utils.rs:29-71): across tables/columns, each subject
     must have ≤1 distinct non-null value.  ``frames`` is a list of
     ``(df, subject_col, value_col)``.  Returns ``(subject, value)``; >1
-    distinct → MultiplicityError (strict) or null value (lenient).
+    distinct → MultiplicityError (strict; check ``multiple_values:<alias>``
+    on a ``ledger``, see errors.strict_check) or null value (lenient).
 
     Plan shape: union of narrow projections → one groupBy → collect_set.
     The union is shuffle-free; the single shuffle is on subject.
@@ -46,12 +50,14 @@ def single_valued(
         unioned = unioned.unionByName(p)
     agg = unioned.groupBy("subject_id").agg(F.collect_set("_v").alias("_vals"))
     if strict:
-        bad = agg.filter(F.size("_vals") > 1).limit(_ERROR_LIMIT).collect()
-        if bad:
-            raise MultiplicityError(
+        strict_check(
+            ledger, f"multiple_values:{alias}", agg.filter(F.size("_vals") > 1),
+            lambda bad: MultiplicityError(
                 f"multiple distinct values for subjects: "
                 f"{[(r['subject_id'], sorted(r['_vals'])) for r in bad]}"
-            )
+            ),
+            limit=_ERROR_LIMIT,
+        )
         return agg.select("subject_id", F.element_at("_vals", 1).alias(alias))
     return agg.select(
         "subject_id",

@@ -15,6 +15,7 @@ from itertools import chain
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..errors import strict_check
 from ..functions.text import normalize_key
 
 # Builtin synonym dictionaries (~ transform/strategies/mapping.rs:92-178).
@@ -30,8 +31,6 @@ VITAL_STATUS_MAP = {
     "unknown": "UNKNOWN_STATUS", "na": "UNKNOWN_STATUS",
 }
 
-#: Distinct unmapped values a failed strict check reports.
-_ERROR_LIMIT = 20
 #: Cells already shaped like a CURIE pass ontology normalisation untouched.
 _CURIE_RX = r"^[A-Za-z]+:\d+$"
 
@@ -74,39 +73,28 @@ def apply_synonym_mapping(
     ledger=None,
 ) -> DataFrame:
     """M2 (~ mapping.rs:181-278): broadcast-join on lower(trim(key));
-    strict mode errors with every unmapped value + closest-match suggestions.
-    With a ``ledger`` (errors.ErrorLedger), the offender probe registers
-    lazily instead of running its own action — all strategies' checks then
-    share ONE validation job."""
+    strict mode errors with every unmapped value + closest-match suggestions
+    (check ``unmapped:<column>`` on a ``ledger``, see errors.strict_check)."""
     out_col = out_col or column
     keyed = df.withColumn("_k", normalize_key(F.col(column)))
     dimmed = F.broadcast(dim.select(normalize_key("key").alias("_k"), F.col("value").alias("_mapped")))
     joined = keyed.join(dimmed, "_k", "left")
-    if strict and ledger is not None:
-        ledger.add_check(
-            f"unmapped:{column}",
-            joined.filter(F.col(column).isNotNull() & F.col("_mapped").isNull())
-            .select(column).distinct(),
-        )
-        result = joined.withColumn(out_col, F.col("_mapped"))
-        return result.drop("_k", "_mapped")
     if strict:
-        bad_rows = (
-            joined.filter(F.col(column).isNotNull() & F.col("_mapped").isNull())
-            .select(column)
-            .distinct()
-            .limit(_ERROR_LIMIT)
-            .collect()
-        )
-        if bad_rows:
+        def unmapped(bad_rows):
             # dims are small by contract, but bound the collect anyway —
             # every other error path is limit-bounded
             vocab = [r["key"] for r in dim.select("key").limit(10000).collect()]
-            entries = [
+            return UnmappedValueError(column, [
                 (r[0], difflib.get_close_matches(str(r[0]).lower(), vocab, n=3))
                 for r in bad_rows
-            ]
-            raise UnmappedValueError(column, entries)
+            ])
+
+        strict_check(
+            ledger, f"unmapped:{column}",
+            joined.filter(F.col(column).isNotNull() & F.col("_mapped").isNull())
+            .select(column).distinct(),
+            unmapped,
+        )
         result = joined.withColumn(out_col, F.col("_mapped"))
     else:
         result = joined.withColumn(out_col, F.coalesce(F.col("_mapped"), F.col(column).cast("string")))
@@ -136,25 +124,20 @@ def normalize_to_ontology(
 ) -> DataFrame:
     """M3 (~ ontology_normaliser.rs:75-141): label-or-synonym → canonical id
     via a broadcast ontology dimension ``(key, id)`` (key already lowercased
-    label or synonym).  CURIE-shaped cells pass through untouched.
-    ``ledger`` defers the strict check into one shared validation job."""
+    label or synonym).  CURIE-shaped cells pass through untouched.  Strict
+    mode errors with every unmapped label (check ``unmapped_ontology:<column>``
+    on a ``ledger``, see errors.strict_check)."""
     is_id = F.col(column).rlike(_CURIE_RX)
     keyed = df.withColumn("_k", F.when(~is_id, normalize_key(F.col(column))))
     dim = F.broadcast(ontology_dim.select(normalize_key("key").alias("_k"), F.col("id").alias("_id")))
     joined = keyed.join(dim, "_k", "left")
-    if strict and ledger is not None:
-        ledger.add_check(
-            f"unmapped_ontology:{column}",
+    if strict:
+        strict_check(
+            ledger, f"unmapped_ontology:{column}",
             joined.filter(F.col(column).isNotNull() & ~is_id & F.col("_id").isNull())
             .select(column).distinct(),
+            lambda bad: UnmappedValueError(column, [(r[0], []) for r in bad]),
         )
-    elif strict:
-        bad = (
-            joined.filter(F.col(column).isNotNull() & ~is_id & F.col("_id").isNull())
-            .select(column).distinct().limit(_ERROR_LIMIT).collect()
-        )
-        if bad:
-            raise UnmappedValueError(column, [(r[0], []) for r in bad])
     expr = F.when(is_id, F.col(column).cast("string")).otherwise(F.col("_id"))
     return joined.withColumn(column, expr).drop("_k", "_id")
 

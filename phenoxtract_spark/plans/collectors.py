@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..descriptors import ContextKind, ContextualizedDataFrame
+from ..errors import strict_check
 from ..functions.durations import time_element_expr
 from ..operators import grouping
 from ..sources.readers import INGEST_ROWNUM
@@ -461,7 +462,6 @@ def collect_medical_procedures(cdfs: Sequence[ContextualizedDataFrame]) -> Optio
 
 def collect_medical_treatments(
     cdfs: Sequence[ContextualizedDataFrame],
-    ledger=None,
 ) -> Optional[DataFrame]:
     """MedicalTreatmentCollector (~ medical_treatment_collector.rs:106-152):
     per TreatmentAgent column, row-zip route-of-administration / drug-type /
@@ -474,10 +474,10 @@ def collect_medical_treatments(
       column without a unit column (or vice versa), or a reference-range
       boundary without its pair → error before any job runs;
     - row-level (~ medical_treatment_data.rs:104-117): a null agent alongside
-      non-null route/drug/dose values → RequiredValueMissing.  Registered on
-      the shared :class:`~phenoxtract_spark.errors.ErrorLedger` when given
-      (ONE validation job for the whole pipeline), else checked eagerly with
-      a bounded collect.
+      non-null route/drug/dose values → RequiredValueMissing, raised now as
+      MultiplicityError after a bounded collect.  Like every collector
+      check it reads the rows ``Pipeline.transform`` stored at its barrier,
+      after the Pipeline's ledger has validated, so it is never deferred.
 
     Long form: (subject_id, agent, route_of_administration, drug_type,
     dose_value, dose_unit, ref_low, ref_high, treatment_target,
@@ -564,16 +564,14 @@ def collect_medical_treatments(
             )
             fidx += 1
     if bad_frames:
-        bad = _union(bad_frames)
-        if ledger is not None:
-            ledger.add_check("treatment_agent_missing", bad)
-        else:
-            rows = bad.limit(_ERROR_LIMIT).collect()
-            if rows:
-                raise grouping.MultiplicityError(
-                    "treatment values without an agent for subjects: "
-                    f"{sorted({r['offender'] for r in rows})}"
-                )
+        strict_check(
+            None, "treatment_agent_missing", _union(bad_frames),
+            lambda rows: grouping.MultiplicityError(
+                "treatment values without an agent for subjects: "
+                f"{sorted({r['offender'] for r in rows})}"
+            ),
+            limit=_ERROR_LIMIT,
+        )
     return _union(frames)
 
 

@@ -6,7 +6,9 @@ Stage parity with the reference:
 1. extract    — CDFs arrive from sources/readers (or any DataFrame + context)
 2. preprocess — C1 trim/null, C2/C3 inference casts, subject forced string
                 (~ preprocessor.rs:13-19)
-3. strategies — ordered, ``is_valid``-gated whole-table rewrites (M7)
+3. strategies — ordered, ``is_valid``-gated whole-table rewrites (M7),
+                then the barrier and "validate": every strict check of
+                stages 2-3, from the Pipeline's ledger, in ONE job (errors.py)
 4. collect    — section builders (collectors.py), each one groupBy(subject)
 5. assemble   — nested packet struct + metadata stamp (G10), to_json
 6. load       — sharded JSONL (scale) or file-per-subject (S6 parity)
@@ -20,6 +22,8 @@ probe, the v2 renderer's probes and every AQE stage of the sink — re-ran
 the whole upstream plan from the file scan (row numbering, casts,
 dimension joins included); on the cohort benchmark's ``etl_v2_files``
 that was 18 collect jobs and 37 sink jobs, each replaying the reader.
+The ledger validates right after the barrier, so a hand-split
+``preprocess → transform → collect`` is checked exactly like ``run``.
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..descriptors import ContextKind, ContextualizedDataFrame
+from ..errors import ErrorLedger
 from ..functions import casting, cleaning
 from ..operators import packet as packet_ops
 from ..session import materialize
@@ -45,9 +50,7 @@ class Pipeline:
     strategies: list[Strategy] = field(default_factory=list)
     cohort: Optional[str] = None
     created_by: str = "phenoxtract-spark"
-    # pass the same errors.ErrorLedger to strict strategies and here: their
-    # offender probes then share ONE validation job, run after transform
-    ledger: object = None
+    ledger: ErrorLedger = field(default_factory=ErrorLedger, init=False)
 
     def add_strategy(self, s: Strategy) -> "Pipeline":
         self.strategies.append(s)
@@ -70,17 +73,7 @@ class Pipeline:
                         col, F.coalesce(F.col(col), F.lit(sc.fill_missing).cast(dt))
                     )
                 if sc.output_type is not None:
-                    target = sc.output_type.value
-                    casted = casting.specific_cast_expr(F.col(col), target)
-                    if self.ledger is not None:
-                        self.ledger.add_check(
-                            f"uncastable:{cdf.context.name}.{col}→{target}",
-                            df.filter(F.col(col).isNotNull() & casted.isNull())
-                            .select(col).distinct(),
-                        )
-                        df = df.withColumn(col, casted)
-                    else:
-                        df = casting.specific_cast(df, col, target)
+                    df = casting.specific_cast(df, col, sc.output_type.value, self.ledger)
             new = cdf.with_df(df)
             new.validate_subject_not_null()
             out.append(new)
@@ -90,10 +83,12 @@ class Pipeline:
     def transform(self, cdfs: list[ContextualizedDataFrame]) -> list[ContextualizedDataFrame]:
         for s in self.strategies:
             if s.is_valid(cdfs):
-                cdfs = s.apply(cdfs)
+                cdfs = s.apply(cdfs, self.ledger)
         # the barrier (module docstring): also when no strategy ran, since
         # the collectors would still re-run the preprocess casts
-        return [cdf.with_df(materialize(cdf.df)) for cdf in cdfs]
+        cdfs = [cdf.with_df(materialize(cdf.df)) for cdf in cdfs]
+        self.ledger.validate()
+        return cdfs
 
     # -- stage 4+5: collect + assemble -------------------------------------
     def collect(self, cdfs: list[ContextualizedDataFrame]) -> DataFrame:
@@ -115,7 +110,7 @@ class Pipeline:
             sections["measurements"] = meas
         medact = collectors.medical_actions_section(
             collectors.collect_medical_procedures(cdfs),
-            collectors.collect_medical_treatments(cdfs, ledger=self.ledger),
+            collectors.collect_medical_treatments(cdfs),
         )
         if medact is not None:
             sections["medical_actions"] = medact
@@ -149,8 +144,6 @@ class Pipeline:
         """Full EP3 lifecycle: returns (subject_id, packet_json)."""
         cdfs = self.preprocess(list(cdfs))
         cdfs = self.transform(cdfs)
-        if self.ledger is not None:
-            self.ledger.validate()
         packets = self.collect(cdfs)
         return packet_ops.packets_to_json(packets)
 

@@ -7,6 +7,9 @@ rewrites the CDF set.  All rewrites stay declarative: broadcast joins +
 column expressions, so each table's strategy chain composes into ONE lazy
 Catalyst plan over its preprocess plan; ``Pipeline.transform``
 materializes that plan once, after the last strategy.
+
+Strict checks register on the ``ledger`` that ``Pipeline.transform`` passes
+to ``apply``; a standalone ``apply(cdfs)`` raises them at once (errors.py).
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ class Strategy:
     def is_valid(self, cdfs: Sequence[ContextualizedDataFrame]) -> bool:
         raise NotImplementedError
 
-    def apply(self, cdfs: list[ContextualizedDataFrame]) -> list[ContextualizedDataFrame]:
+    def apply(self, cdfs: list[ContextualizedDataFrame], ledger=None) -> list[ContextualizedDataFrame]:
         raise NotImplementedError
 
     def _columns(self, cdf: ContextualizedDataFrame, kind: ContextKind) -> list[str]:
@@ -51,7 +54,7 @@ class AliasMapStrategy(Strategy):
             sc.alias_map for cdf in cdfs for sc in cdf.context.series_contexts
         )
 
-    def apply(self, cdfs):
+    def apply(self, cdfs, ledger=None):
         out = []
         for cdf in cdfs:
             df = cdf.df
@@ -72,19 +75,18 @@ class MappingStrategy(Strategy):
     kind: ContextKind
     dictionary: dict
     strict: bool = True
-    ledger: object = None  # errors.ErrorLedger → defer strict checks
 
     def is_valid(self, cdfs):
         return any(self._columns(cdf, self.kind) for cdf in cdfs)
 
-    def apply(self, cdfs):
+    def apply(self, cdfs, ledger=None):
         dim = mapping.mapping_dim(self.spark, self.dictionary)
         out = []
         for cdf in cdfs:
             df = cdf.df
             for col in self._columns(cdf, self.kind):
                 df = mapping.apply_synonym_mapping(
-                    df, col, dim, strict=self.strict, ledger=self.ledger
+                    df, col, dim, strict=self.strict, ledger=ledger
                 )
             out.append(cdf.with_df(df))
         return out
@@ -98,7 +100,6 @@ class OntologyNormaliserStrategy(Strategy):
     ontology_dim: DataFrame
     kinds: tuple[ContextKind, ...] = (ContextKind.HPO, ContextKind.DISEASE)
     strict: bool = True
-    ledger: object = None  # errors.ErrorLedger → defer strict checks
 
     def is_valid(self, cdfs):
         return any(self._columns(cdf, k) for cdf in cdfs for k in self.kinds) or any(
@@ -118,7 +119,7 @@ class OntologyNormaliserStrategy(Strategy):
             and not re.match(r"^[A-Za-z]+:\d+(#.*)?$", c)
         ]
 
-    def apply(self, cdfs):
+    def apply(self, cdfs, ledger=None):
         out = []
         for cdf in cdfs:
             df = cdf.df
@@ -126,7 +127,7 @@ class OntologyNormaliserStrategy(Strategy):
                 for col in self._columns(cdf, k):
                     df = mapping.normalize_to_ontology(
                         df, col, self.ontology_dim, strict=self.strict,
-                        ledger=self.ledger,
+                        ledger=ledger,
                     )
             # header normalization: 'Rhinorrhea' column → 'HP:0031417'
             # (driver-side lookup bounded by the table's column count; the
@@ -201,7 +202,7 @@ class AgeToIso8601Strategy(Strategy):
     def is_valid(self, cdfs):
         return any(self._age_cols(cdf) for cdf in cdfs)
 
-    def apply(self, cdfs):
+    def apply(self, cdfs, ledger=None):
         out = []
         for cdf in cdfs:
             df = cdf.df
@@ -240,16 +241,16 @@ class DateToAgeStrategy(Strategy):
         has_dates = any(self._date_cols(cdf) for cdf in cdfs)
         return has_dob and has_dates
 
-    def dob_map(self, cdfs) -> DataFrame:
+    def dob_map(self, cdfs, ledger=None) -> DataFrame:
         """(subject_id, dob) with per-patient uniqueness enforced
-        (~ date_to_age.rs:222-271): a subject with conflicting DOBs raises
-        MultiplicityError when ``strict``, else gets a null DOB (no age)."""
+        (~ date_to_age.rs:222-271): a subject with conflicting DOBs fails
+        the check when ``strict``, else gets a null DOB (no age)."""
         frames = []
         for cdf in cdfs:
             subj = cdf.subject_col
             for col in self._columns(cdf, ContextKind.DATE_OF_BIRTH):
                 frames.append((cdf.df, subj, col))
-        dob = grouping.single_valued(frames, alias="dob", strict=self.strict)
+        dob = grouping.single_valued(frames, alias="dob", strict=self.strict, ledger=ledger)
         # collision-proof internal names: user tables may legitimately have
         # columns called 'subject_id' or 'dob'
         return dob.select(
@@ -257,8 +258,8 @@ class DateToAgeStrategy(Strategy):
             F.col("dob").cast("date").alias("__pxs_dob"),
         )
 
-    def apply(self, cdfs):
-        dob = F.broadcast(self.dob_map(cdfs))
+    def apply(self, cdfs, ledger=None):
+        dob = F.broadcast(self.dob_map(cdfs, ledger))
         out = []
         for cdf in cdfs:
             cols = self._date_cols(cdf)
@@ -314,7 +315,7 @@ class HpoDiseaseSplitterStrategy(Strategy):
     def is_valid(self, cdfs):
         return any(self._columns(cdf, ContextKind.HPO_OR_DISEASE) for cdf in cdfs)
 
-    def apply(self, cdfs):
+    def apply(self, cdfs, ledger=None):
         out = []
         for cdf in cdfs:
             cols = self._columns(cdf, ContextKind.HPO_OR_DISEASE)
@@ -363,7 +364,7 @@ class MultiHpoColExpansionStrategy(Strategy):
     def is_valid(self, cdfs):
         return any(self._columns(cdf, ContextKind.MULTI_HPO_ID) for cdf in cdfs)
 
-    def apply(self, cdfs):
+    def apply(self, cdfs, ledger=None):
         from ..descriptors import Identifier, SeriesContext
 
         out = []

@@ -6,8 +6,8 @@ import json
 import pytest
 
 from phenoxtract_spark.descriptors import ContextualizedDataFrame
+from phenoxtract_spark.errors import PipelineValidationError
 from phenoxtract_spark.operators import ontology
-from phenoxtract_spark.operators.grouping import MultiplicityError
 from phenoxtract_spark.plans.config import ConfigError, compile_pipeline, run_from_config
 from phenoxtract_spark.sources.readers import load_config
 
@@ -112,5 +112,6 @@ def test_date_to_age_strict_from_config(spark):
     assert _dob_conflict_ages(spark, strict=False) == [
         ("P1", None), ("P1", None), ("P2", "P40Y"),
     ]
-    with pytest.raises(MultiplicityError, match="P1"):
+    # strict: the conflict is reported once, at transform's validation
+    with pytest.raises(PipelineValidationError, match="P1"):
         _dob_conflict_ages(spark, strict=True)

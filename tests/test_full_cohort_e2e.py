@@ -132,12 +132,12 @@ def test_full_cohort_packets(spark, cohort):
     hpo_dim = ontology.bidict_dim(spark, ontology.MINI_HPO).select("key", "id")
     mondo_dim = ontology.bidict_dim(spark, ontology.MINI_MONDO).select("key", "id")
     ledger = ErrorLedger()
-    pipe = Pipeline(cohort="COH", ledger=ledger)
+    pipe = Pipeline(cohort="COH")
     pipe.add_strategy(AliasMapStrategy())
-    pipe.add_strategy(MappingStrategy(spark, ContextKind.SUBJECT_SEX, mapping.SEX_MAP, ledger=ledger))
-    pipe.add_strategy(MappingStrategy(spark, ContextKind.VITAL_STATUS, mapping.VITAL_STATUS_MAP, ledger=ledger))
-    pipe.add_strategy(OntologyNormaliserStrategy(ontology_dim=hpo_dim, kinds=(ContextKind.HPO,), ledger=ledger))
-    pipe.add_strategy(OntologyNormaliserStrategy(ontology_dim=mondo_dim, kinds=(ContextKind.DISEASE,), ledger=ledger))
+    pipe.add_strategy(MappingStrategy(spark, ContextKind.SUBJECT_SEX, mapping.SEX_MAP))
+    pipe.add_strategy(MappingStrategy(spark, ContextKind.VITAL_STATUS, mapping.VITAL_STATUS_MAP))
+    pipe.add_strategy(OntologyNormaliserStrategy(ontology_dim=hpo_dim, kinds=(ContextKind.HPO,)))
+    pipe.add_strategy(OntologyNormaliserStrategy(ontology_dim=mondo_dim, kinds=(ContextKind.DISEASE,)))
     pipe.add_strategy(DateToAgeStrategy())
 
     out = {r["subject_id"]: json.loads(r["packet_json"]) for r in pipe.run(cohort).collect()}
@@ -184,10 +184,10 @@ def test_full_cohort_packets(spark, cohort):
 def test_full_cohort_ledger_catches_bad_rows(spark, cohort):
     hpo_dim = ontology.bidict_dim(spark, ontology.MINI_HPO).select("key", "id")
     ledger = ErrorLedger()
-    pipe = Pipeline(ledger=ledger)
+    pipe = Pipeline()
     pipe.add_strategy(AliasMapStrategy())
     pipe.add_strategy(
-        OntologyNormaliserStrategy(ontology_dim=hpo_dim, kinds=(ContextKind.HPO,), ledger=ledger)
+        OntologyNormaliserStrategy(ontology_dim=hpo_dim, kinds=(ContextKind.HPO,))
     )
     bad = spark.createDataFrame(
         [("P009", "unknown phenotype xyz", None)], "pid string, hpo1 string, hpo2 string"

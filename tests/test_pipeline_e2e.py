@@ -386,7 +386,7 @@ def test_fill_missing_and_output_type(spark):
 
 def test_output_type_strict_cast_error(spark):
     from phenoxtract_spark.descriptors import OutputDataType
-    from phenoxtract_spark.functions.casting import CastError
+    from phenoxtract_spark.errors import PipelineValidationError
 
     df = spark.createDataFrame([("P1", "notanumber")], "sid string, n string")
     ctx = TableContext(
@@ -400,8 +400,11 @@ def test_output_type_strict_cast_error(spark):
             ),
         ],
     )
-    with pytest.raises(CastError):
-        Pipeline().preprocess([ContextualizedDataFrame(df=df, context=ctx)])
+    # the cast check registers in preprocess and fails at transform's validation
+    pipe = Pipeline()
+    cdfs = pipe.preprocess([ContextualizedDataFrame(df=df, context=ctx)])
+    with pytest.raises(PipelineValidationError, match="uncastable:n→double.*notanumber"):
+        pipe.transform(cdfs)
 
 
 def _plan_leaves(df):
@@ -455,3 +458,23 @@ def test_transform_ends_in_one_barrier_per_table(spark, hpo_dim, tmp_path, with_
     if with_strategies:
         assert rows["P1"]["sex"] == "MALE" and rows["P1"]["hpo"] == "HP:0001945"
         assert rows["P2"]["hpo"] is None
+
+
+def test_run_raises_on_treatment_route_without_agent(spark):
+    # collector checks stay eager on the Pipeline path: they read the rows
+    # stored at transform's barrier, after the ledger has validated
+    from phenoxtract_spark.operators.grouping import MultiplicityError
+
+    df = spark.createDataFrame(
+        [("P1", None, "NCIT:C38276")], "sid string, agent string, route string"
+    )
+    ctx = TableContext(
+        name="treat",
+        series_contexts=[
+            sc("sid", ContextKind.SUBJECT_ID),
+            sc("agent", ContextKind.TREATMENT_AGENT, building_block_id="b"),
+            sc("route", ContextKind.ROUTE_OF_ADMINISTRATION, building_block_id="b"),
+        ],
+    )
+    with pytest.raises(MultiplicityError, match="without an agent"):
+        Pipeline().run([ContextualizedDataFrame(df=df, context=ctx)])
