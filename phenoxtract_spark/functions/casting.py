@@ -32,6 +32,10 @@ DATE_FORMATS = [
 DATETIME_FORMATS = ["yyyy/MM/dd HH:mm:ss"]
 ISO_PREFIX_RX = r"^\d{4}-\d{1,2}"
 BARE_YEAR_RX = r"^\d{4}$"
+# Every DATE_FORMATS / DATETIME_FORMATS pattern, the ISO cast and the bare
+# year need an ASCII digit first, after an optional sign ('-2020-01-15' and
+# '+002020-01-15' parse as dates)
+LEADING_DIGIT_RX = r"^[+-]?\d"
 
 
 def _c(col: Column | str) -> Column:
@@ -112,11 +116,13 @@ def castability_stats(df: DataFrame, columns: list[str]) -> dict[str, dict[str, 
     priority bool→int→decimal→float→date→datetime).
 
     Phase 1 (cheap: casts only) counts non-null / bool / int / decimal /
-    float survivors.  Phase 2 runs the expensive multi-format date/datetime
-    parse chains ONLY for string columns still undecided after phase 1 —
-    numeric and boolean columns never pay for six ``try_to_timestamp``
-    attempts.  Both phases are single jobs; at 100 TB run them on a sample
-    and keep a strict ``try_cast`` validation in the cast projection."""
+    float survivors and cells starting with a digit or sign.  Phase 2 runs
+    the expensive multi-format date/datetime parse chains ONLY for string
+    columns still undecided after phase 1 whose every cell starts that
+    way — numeric, boolean and free-text columns never pay for six
+    ``try_to_timestamp`` attempts.  Both phases are single jobs; at 100 TB
+    run them on a sample and keep a strict ``try_cast`` validation in the
+    cast projection."""
     # the parse chains are expensive per ROW, so a small input packed into
     # 1-2 scan splits serializes them (a few MB of parquet = one split, but
     # six try_to_timestamp chains × rows is seconds of CPU).  Fan the stats
@@ -144,17 +150,21 @@ def castability_stats(df: DataFrame, columns: list[str]) -> dict[str, dict[str, 
             aggs.append(F.count(parse_int_via_float(s)).alias(f"{col}__int"))
             aggs.append(F.count(parse_wide_int(s)).alias(f"{col}__decimal"))
             aggs.append(F.count(try_cast(s, "double")).alias(f"{col}__float"))
+            aggs.append(F.count(F.when(s.rlike(LEADING_DIGIT_RX), 1)).alias(f"{col}__digit"))
     row = df.agg(*aggs).collect()[0].asDict()
     out: dict[str, dict[str, int]] = {}
     for k, v in row.items():
         col, stat = k.rsplit("__", 1)
         out.setdefault(col, {})[stat] = v
-    # phase 2: date/datetime counts only where bool/int/decimal/float didn't decide
+    # phase 2: date/datetime counts only where bool/int/decimal/float didn't
+    # decide and every cell starts like a date (any other cell keeps the
+    # date/datetime counts below n, so the chains could not decide)
     undecided = [
         col
         for col in columns
         if dtypes[col] == "string"
         and out[col].get("n", 0) > 0
+        and out[col]["digit"] == out[col]["n"]
         and not any(out[col].get(t, -1) == out[col]["n"] for t in ("bool", "int", "decimal", "float"))
     ]
     if undecided:

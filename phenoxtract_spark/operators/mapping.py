@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..errors import strict_check
 from ..functions.text import normalize_key
+from ..session import local_frame
 
 # Builtin synonym dictionaries (~ transform/strategies/mapping.rs:92-178).
 SEX_MAP = {
@@ -59,9 +60,7 @@ def literal_map_expr(col: Column | str, mapping: dict, default_passthrough: bool
 
 def mapping_dim(spark, mapping: dict, key_col: str = "key", val_col: str = "value") -> DataFrame:
     """Materialize a Python dict as a broadcast-able dimension DataFrame."""
-    return spark.createDataFrame(
-        [(k, v) for k, v in mapping.items()], schema=f"{key_col} string, {val_col} string"
-    )
+    return local_frame(spark, list(mapping.items()), f"{key_col} string, {val_col} string")
 
 
 def apply_synonym_mapping(

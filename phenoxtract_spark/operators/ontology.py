@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_key
+from ..session import local_frame
 
 NOT_FOUND = "NOT_FOUND"
 
@@ -45,8 +46,8 @@ def bidict_dim(spark: SparkSession, terms: Iterable[OntologyTerm],
         rows.append((t.id.strip().lower(), t.id, t.label, "id", resource))
         for s in t.synonyms:
             rows.append((s.strip().lower(), t.id, t.label, "synonym", resource))
-    return spark.createDataFrame(
-        rows, schema="key string, id string, label string, kind string, resource string"
+    return local_frame(
+        spark, rows, "key string, id string, label string, kind string, resource string"
     )
 
 
@@ -105,7 +106,7 @@ def pre_resolve(
         raise ValueError(f"distinct({column}) exceeds max_distinct={max_distinct}")
     resolved = resolver(terms)
     rows = [(k, v if v is not None else NOT_FOUND) for k, v in resolved.items()]
-    dim = spark.createDataFrame(rows or [("", NOT_FOUND)], schema="key string, resolved string")
+    dim = local_frame(spark, rows, "key string, resolved string")
     keyed = df.withColumn("_k", normalize_key(F.col(column)))
     out = keyed.join(F.broadcast(dim.withColumnRenamed("key", "_k")), "_k", "left")
     return out.withColumn(

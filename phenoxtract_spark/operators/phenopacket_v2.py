@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..functions.casting import parse_datetime_multi
 from ..functions.durations import is_iso8601_duration
 from ..plans import collectors
+from ..session import local_frame
 
 SCHEMA_VERSION = "2.0"
 # metaData.created is fixed, so a render is byte-stable across runs
@@ -500,7 +501,8 @@ def render_packets_v2(
             for i, r in enumerate(resources)
         ]
         rdim = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 rec_rows,
                 "rank int, prefix string, name string, url string, version string,"
                 "namespacePrefix string, iriPrefix string",

@@ -1,10 +1,10 @@
 """Scans/sources (SURVEY §2.1 S1-S5, S7-S8).
 
-CSV is the native distributed path (S1).  Excel (S2) has no JVM codec in
-this container: the reader parses on the driver via pandas/openpyxl when
-available (gated import) and always lands in a distributed DataFrame —
-acceptable because spreadsheets are config-scale inputs; 100 TB data arrives
-as CSV/parquet.
+CSV is the native distributed path (S1).  Excel (S2) has no JVM codec: the
+reader parses on the driver (stdlib OOXML, :mod:`.xlsx`) and, like the
+transposed CSV path, lands in a JVM ``LocalRelation`` (``session.local_frame``)
+— acceptable because spreadsheets are config-scale inputs; 100 TB data
+arrives as CSV/parquet.
 """
 
 from __future__ import annotations
@@ -13,6 +13,8 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import local_frame
 
 
 def default_column_names(n: int) -> list[str]:
@@ -195,16 +197,13 @@ def vectors_to_df(spark: SparkSession, vectors: list[list], has_headers: bool) -
         "str": T.StringType(),
     }
     spark_fields = [T.StructField(n, _SPARK_T[kinds[n]], True) for n in names]
-    # Build rows directly (NOT through a pandas float64 Series): a float64
-    # Series renders missing cells as NaN, which Spark keeps as a double
-    # VALUE — empty numeric cells would never be null and fill_missing /
-    # C1 empty→null could never fire on them.
+    # rows, not a pandas frame: see session.local_frame on NaN
     n_rows = max((len(d) for d in cols.values()), default=0)
     rows = [
         tuple(cols[n][i] if i < len(cols[n]) else None for n in names)
         for i in range(n_rows)
     ]
-    return spark.createDataFrame(rows, schema=T.StructType(spark_fields))
+    return local_frame(spark, rows, T.StructType(spark_fields))
 
 
 def load_config(path: str) -> dict:

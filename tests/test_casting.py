@@ -127,3 +127,39 @@ def test_time_element_tagged_union(spark):
     assert rows[0]["te"]["age"]["iso8601duration"] == "P47Y"
     assert rows[1]["te"]["timestamp"] is not None and rows[1]["te"]["age"] is None
     assert rows[2]["te"] is None
+
+
+# cells at the edge of the phase-2 guard: signed and wide years parse as
+# dates, a tab or full-width digits do not, the rest phase 1 decides
+GUARD_EDGE_CELLS = [
+    "-2020-01-15", "+12345-01-15", "+002020-01-15", "\t2020-01-15",
+    "２０２０-01-15", "2020", "2020-1-5", "+2020",
+]
+
+
+def test_date_guard_keeps_column_decisions(spark):
+    # each cell alone, and beside a plain date: the guarded stats decide
+    # every column as the unguarded date/datetime chains would
+    cols = {}
+    for i, cell in enumerate(GUARD_EDGE_CELLS):
+        cols[f"alone{i}"] = (cell, cell)
+        cols[f"mixed{i}"] = (cell, "2020-01-15")
+    names = list(cols)
+    df = spark.createDataFrame(
+        [tuple(cols[c][r] for c in names) for r in range(2)],
+        ", ".join(f"{c} string" for c in names),
+    )
+    stats = casting.castability_stats(df, names)
+    chains = df.agg(*[
+        F.count(parse(F.trim(F.col(c)))).alias(f"{c}__{t}")
+        for c in names
+        for t, parse in (
+            ("date", casting.parse_date_multi),
+            ("datetime", casting.parse_datetime_multi),
+        )
+    ]).collect()[0]
+    for c in names:
+        unguarded = {**stats[c], "date": chains[f"{c}__date"], "datetime": chains[f"{c}__datetime"]}
+        assert casting.decide_ambivalent(stats[c]) == casting.decide_ambivalent(unguarded), (
+            c, cols[c], stats[c], unguarded,
+        )

@@ -460,6 +460,49 @@ def test_transform_ends_in_one_barrier_per_table(spark, hpo_dim, tmp_path, with_
         assert rows["P2"]["hpo"] is None
 
 
+def test_pre_barrier_plans_read_files_and_jvm_rows_only(spark, hpo_dim, tmp_path):
+    """Before the barrier, the strategies' plans (which the ledger's checks
+    re-run) and the transposed and Excel readers read only files and JVM
+    local rows: no dimension broadcast or table scan starts a Python
+    worker."""
+    from phenoxtract_spark.sources.readers import ExtractionConfig, read_csv, read_excel
+    from test_xlsx_reader import build_xlsx, s
+
+    path = tmp_path / "cohort.csv"
+    path.write_text("pid,sex,hpo\nP1,m,fever\nP2,female,no_info\n")
+    df = read_csv(spark, str(path), ExtractionConfig("cohort"), attach_rownum=True)
+    ctx = TableContext(
+        name="cohort",
+        series_contexts=[
+            sc("pid", ContextKind.SUBJECT_ID),
+            sc("sex", ContextKind.SUBJECT_SEX),
+            SeriesContext(
+                identifier=Identifier.of("hpo"),
+                data_context=Context(ContextKind.HPO),
+                alias_map={"no_info": None},
+            ),
+        ],
+    )
+    pipe = Pipeline()
+    cdfs = pipe.preprocess([ContextualizedDataFrame(df=df, context=ctx)])
+    for strategy in (
+        AliasMapStrategy(),
+        OntologyNormaliserStrategy(ontology_dim=hpo_dim),
+        MappingStrategy(spark, ContextKind.SUBJECT_SEX, mapping.SEX_MAP),
+    ):
+        cdfs = strategy.apply(cdfs, pipe.ledger)
+    names = {name for name, _ in _plan_leaves(cdfs[0].df)}
+    assert names == {"LogicalRelation", "LocalRelation"}, _plan_leaves(cdfs[0].df)
+
+    transposed = tmp_path / "transposed.csv"
+    transposed.write_text("pid,P1,P2\nsex,m,f\n")
+    cfg = ExtractionConfig("t", patients_are_rows=False)
+    assert _plan_leaves(read_csv(spark, str(transposed), cfg)) == [("LocalRelation", "")]
+    xlsx = str(tmp_path / "t.xlsx")
+    build_xlsx(xlsx, [[s(0), s(1)], [s(2), s(3)]], ["pid", "sex", "P1", "m"])
+    assert _plan_leaves(read_excel(spark, xlsx, ExtractionConfig("x"))) == [("LocalRelation", "")]
+
+
 def test_run_raises_on_treatment_route_without_agent(spark):
     # collector checks stay eager on the Pipeline path: they read the rows
     # stored at transform's barrier, after the ledger has validated
