@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import session
+
 
 def funnel(events: DataFrame, steps: list[str], user_col: str = "user_id",
            ts_col: str = "ts", type_col: str = "event_type") -> DataFrame:
@@ -374,10 +376,12 @@ def markov_attribution(events: DataFrame, conversion: str = "purchase",
         .agg(F.sum("n").cast("bigint").alias("n"))
     )
     tot = vtrans.groupBy("variant", "src").agg(F.sum("n").cast("bigint").alias("_tot"))
-    probs = vtrans.join(tot, ["variant", "src"]).select(
-        "variant", "src", "dst",
-        (F.col("n").cast("double") / F.col("_tot").cast("double")).alias("p"),
-    ).localCheckpoint(eager=True)  # iterated 12x below; dimension-sized
+    probs = session.materialize(
+        vtrans.join(tot, ["variant", "src"]).select(
+            "variant", "src", "dst",
+            (F.col("n").cast("double") / F.col("_tot").cast("double")).alias("p"),
+        )
+    )  # iterated 12x below; dimension-sized
     states = probs.select("variant", F.col("src").alias("state")).distinct()
     p_prev = states.select("variant", "state", F.lit(0.0).alias("p"))
     for _ in range(int(iterations)):
@@ -393,16 +397,15 @@ def markov_attribution(events: DataFrame, conversion: str = "purchase",
         pd_ = F.when(F.col("dst") == CONV, F.lit(1.0)).otherwise(
             F.coalesce(F.col("_pp"), F.lit(0.0))
         )
-        p_prev = (
+        # per-round checkpoint (the pagerank discipline): the state is
+        # |variants| x |states| rows, but without it each round's plan
+        # contains all prior rounds and analysis cost grows O(k^2)
+        p_prev = session.materialize(
             joined.withColumn(
                 "_t", F.round(F.col("p") * pd_, 9).cast("decimal(28,12)")
             )
             .groupBy("variant", F.col("src").alias("state"))
             .agg(F.round(F.sum("_t").cast("double"), 9).alias("p"))
-            # per-round checkpoint (the pagerank discipline): the state is
-            # |variants| x |states| rows, but without it each round's plan
-            # contains all prior rounds and analysis cost grows O(k^2)
-            .localCheckpoint(eager=True)
         )
     full_p = p_prev.filter(
         (F.col("variant") == FULL) & (F.col("state") == START)

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import session
+
 
 def _sq_l2(a: Column, b: Column) -> Column:
     """Squared euclidean distance between two array columns (JVM-side)."""
@@ -139,9 +141,9 @@ def kmeans_iterate(vectors: DataFrame, init_centroids: DataFrame,
         assign = kmeans_assign(
             vectors, cen, id_col=id_col, vec_col=vec_col, round_dp=round_dp
         )
-        cen = kmeans_recompute(
-            vectors, assign, id_col=id_col, vec_col=vec_col, round_dp=round_dp
-        ).localCheckpoint(eager=True)
+        cen = session.materialize(
+            kmeans_recompute(vectors, assign, id_col=id_col, vec_col=vec_col, round_dp=round_dp)
+        )
     # final assignment against the last recomputed centroids, so the
     # returned clustering reflects every completed round
     return kmeans_assign(vectors, cen, id_col=id_col, vec_col=vec_col,
@@ -194,9 +196,7 @@ def semantic_canonical(vectors: DataFrame, centroids: DataFrame,
     # consumed twice by the mates union below — materialize the
     # (dup-density-sized) pair list so the bucket join + cosine verify
     # run exactly once
-    pairs = ivf_neardup_pairs(vectors, centroids, threshold, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
+    pairs = session.materialize(ivf_neardup_pairs(vectors, centroids, threshold, id_col, vec_col))
     mates = pairs.select(
         F.col("id_a").alias("id"), F.col("id_b").alias("mate")
     ).unionByName(

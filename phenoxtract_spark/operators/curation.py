@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import session
 from .dedup import normalized_text, shingles_long
 
 # ---------------------------------------------------------------------------
@@ -493,10 +494,12 @@ def cross_source_overlap(df: DataFrame, group_col: str, text_col: str) -> DataFr
     # distinct (source, digest) is the expensive pass (full text scan +
     # one shuffle); materialize it once — it feeds the self-join twice AND
     # the source list, so without this the text column is scanned 3×
-    digests = df.select(
-        F.col(group_col).alias("src"),
-        F.md5(normalized_text(text_col)).alias("dig"),
-    ).distinct().localCheckpoint(eager=True)
+    digests = session.materialize(
+        df.select(
+            F.col(group_col).alias("src"),
+            F.md5(normalized_text(text_col)).alias("dig"),
+        ).distinct()
+    )
     overlap = (
         digests.alias("a")
         .join(
@@ -645,11 +648,7 @@ def train_quality_lr(df: DataFrame, id_col: str, text_col: str,
         .otherwise(F.lit(0.0))
         .alias("y"),
     )
-    fl = (
-        feats.unionByName(bias)
-        .join(labels, "id")
-        .localCheckpoint(eager=True)
-    )
+    fl = session.materialize(feats.unionByName(bias).join(labels, "id"))
     n = df.count()
     spark = df.sparkSession
     w: dict[int, float] = {}
@@ -839,10 +838,9 @@ def dsir_select(df: DataFrame, id_col: str, text_col: str, target_pred,
     )
     # per-(doc, bucket) counts — the only corpus-sized shuffle; the two
     # distribution dims below roll up from it (bucket-space-sized)
-    feats = (
+    feats = session.materialize(
         pairs.groupBy("id", "_is_tgt", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     dims = feats.groupBy("bucket").agg(
         F.sum(F.when(F.col("_is_tgt"), F.col("cnt")).otherwise(F.lit(0))).alias("_tc"),
@@ -1136,19 +1134,21 @@ def domain_mixture_weights(df: DataFrame, domain_col: str, quality: Column,
     iterations on the K-row domain relation (K = #domains, tiny) with
     1-row broadcast sums — cost is one table pass regardless of rounds.
     Returns (domain, n_docs, domain_loss, weight), Σweight = 1."""
-    dom = df.groupBy(F.col(domain_col).alias("domain")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.round(
-            F.lit(1.0)
-            - F.sum(F.round(quality, 9).cast("decimal(28,12)"))
-            .cast("double") / F.count(F.lit(1)),
-            round_dp,
-        ).alias("domain_loss"),
-        # the ONLY data-sized aggregate: checkpoint so the unrolled
-        # rounds (each with a 1-row crossJoin branch that would otherwise
-        # replay the corpus groupBy) iterate on the K-row result —
-        # without this the 3-round plan held 255 exchanges
-    ).localCheckpoint(eager=True)
+    dom = session.materialize(
+        df.groupBy(F.col(domain_col).alias("domain")).agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.round(
+                F.lit(1.0)
+                - F.sum(F.round(quality, 9).cast("decimal(28,12)"))
+                .cast("double") / F.count(F.lit(1)),
+                round_dp,
+            ).alias("domain_loss"),
+            # the ONLY data-sized aggregate: checkpoint so the unrolled
+            # rounds (each with a 1-row crossJoin branch that would otherwise
+            # replay the corpus groupBy) iterate on the K-row result —
+            # without this the 3-round plan held 255 exchanges
+        )
+    )
     k = dom.agg(F.count(F.lit(1)).alias("_k"))
     w = (
         dom.crossJoin(F.broadcast(k))
@@ -1177,8 +1177,10 @@ def domain_mixture_weights(df: DataFrame, domain_col: str, quality: Column,
             F.sum(F.col("_raw").cast("decimal(28,12)"))
             .cast("double").alias("_tot")
         )
-        w = raw.crossJoin(F.broadcast(tot)).select(
-            "domain", "n_docs", "domain_loss",
-            F.round(F.col("_raw") / F.col("_tot"), round_dp).alias("weight"),
-        ).localCheckpoint(eager=True)  # K rows; keeps round r+1's plan flat
+        w = session.materialize(
+            raw.crossJoin(F.broadcast(tot)).select(
+                "domain", "n_docs", "domain_loss",
+                F.round(F.col("_raw") / F.col("_tot"), round_dp).alias("weight"),
+            )
+        )  # K rows; keeps round r+1's plan flat
     return w

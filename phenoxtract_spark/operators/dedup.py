@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import session
+
 
 def normalized_text(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -134,7 +136,7 @@ def lsh_candidate_pairs(
     buckets are usually exact-dup families) or a re-banded second pass.
     Dropped buckets are observable via :func:`lsh_bucket_overflow`; cap
     OFF by default so small-scale results stay exact/oracle-checkable."""
-    bands = bands.localCheckpoint(eager=True)
+    bands = session.materialize(bands)
     if max_bucket is not None:
         # one extra narrow agg on the already-materialized bands relation;
         # broadcast-friendly (overflowing keys are few by construction)
@@ -213,7 +215,7 @@ def _pair_overlaps(df: DataFrame, id_col: str, text_col: str, k: int,
         # pairs are dup-density-sized (≪ corpus), so executor-local
         # checkpoint storage is trivial.  Measured 10.4-11.4 → 8.0-8.5 s
         # on the sf0.1 canonical pipeline (3-rep fresh-JVM A/B).
-        candidates = candidates.localCheckpoint(eager=True)
+        candidates = session.materialize(candidates)
         ids = (
             candidates.select(F.col("id_a").alias("__jid"))
             .unionByName(candidates.select(F.col("id_b").alias("__jid")))
@@ -225,13 +227,12 @@ def _pair_overlaps(df: DataFrame, id_col: str, text_col: str, k: int,
         # twice.  It is candidate-bounded like the pairs themselves, so
         # materialize it once — one scan + one shingle build per query
         # instead of two (r12; measured on the sf0.1 canonical pipeline).
-        arrs = (
+        arrs = session.materialize(
             df.join(ids, F.col(id_col) == F.col("__jid"), "leftsemi")
             .select(
                 F.col(id_col).alias("id"),
                 F.array_distinct(shingles(text_col, k)).alias("shs"),
             )
-            .localCheckpoint(eager=True)
         )
         return (
             candidates.join(
@@ -341,7 +342,7 @@ def simhash_band_pairs(fingerprints: DataFrame, bits: int = 60,
     # (id, fp) is two narrow columns but its subtree is the wide packed
     # simhash aggregate — consumed 4× below (both band sides + both
     # hamming sides); materialize once
-    fingerprints = fingerprints.localCheckpoint(eager=True)
+    fingerprints = session.materialize(fingerprints)
     cand = banded_pairs(fingerprints, bits=bits, band_width=bits // n_bands,
                         id_col=id_col, fp_col=fp_col)
     fa = fingerprints.select(F.col(id_col).alias("id_a"), F.col(fp_col).alias("_fa"))
@@ -386,9 +387,11 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     # the hash partitioning, so every round's ``sym.dst == labels.id``
     # join reuses it instead of re-exchanging the edge list once per
     # round (diameter rounds × one |2·edges| shuffle saved).
-    sym = edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionByName(
-        edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    ).repartition("dst").localCheckpoint(eager=True)
+    sym = session.materialize(
+        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionByName(
+            edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+        ).repartition("dst")
+    )
     labels = vertices.select(F.col(vertices.columns[0]).alias("id")).withColumn(
         "label", F.col("id")
     )
@@ -409,7 +412,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                 (F.col("nmin") < F.col("label")).alias("_changed"),
             )
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = session.materialize(new_labels)
         changed = new_labels.filter(F.col("_changed")).count()
         if stats is not None:
             stats["label_changes"].append(changed)
@@ -603,11 +606,13 @@ def incremental_dedup(df: DataFrame, id_col: str, text_col: str,
     band keys are a materialized index (bucketed by digest/band_key) that
     ingest batches join against without rescanning the corpus.
     """
-    flags = df.select(
-        F.col(id_col).alias("id"),
-        is_new.alias("_new"),
-        F.md5(normalized_text(text_col)).alias("digest"),
-    ).localCheckpoint(eager=True)
+    flags = session.materialize(
+        df.select(
+            F.col(id_col).alias("id"),
+            is_new.alias("_new"),
+            F.md5(normalized_text(text_col)).alias("digest"),
+        )
+    )
     sig = minhash_signature(df, id_col, text_col, num_hashes=num_hashes, k=k)
     bands = lsh_bands(sig, rows_per_band=rows_per_band).join(
         flags.select("id", "_new"), "id"
@@ -679,7 +684,7 @@ def jaccard_prefix_pairs(df: DataFrame, id_col: str, text_col: str,
     from pyspark.sql.window import Window
 
     dsh = shingles_long(df, id_col, text_col, k).distinct()
-    dsh = dsh.localCheckpoint(eager=True)  # feeds freq + rank + both verify sides
+    dsh = session.materialize(dsh)  # feeds freq + rank + both verify sides
     freq = dsh.groupBy("sh").agg(F.count(F.lit(1)).alias("_f"))
     w = Window.partitionBy("id").orderBy("_f", "sh")
     wn = Window.partitionBy("id")
@@ -688,10 +693,12 @@ def jaccard_prefix_pairs(df: DataFrame, id_col: str, text_col: str,
         F.row_number().over(w).alias("_pos"),
         F.count(F.lit(1)).over(wn).alias("_n"),
     )
-    prefix = ranked.filter(
-        F.col("_pos")
-        <= F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")) + 1
-    ).select("id", "sh", "_n").localCheckpoint(eager=True)
+    prefix = session.materialize(
+        ranked.filter(
+            F.col("_pos")
+            <= F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")) + 1
+        ).select("id", "sh", "_n")
+    )
     cand = (
         prefix.alias("a")
         .join(
@@ -817,7 +824,7 @@ def duplicate_span_pairs(df: DataFrame, id_col: str, text_col: str,
     # 1.4% to prune (13.22M → 13.04M anchors).  The self-join's two
     # sorted exchanges over the narrow (id, pos:int, h) relation remain
     # the cheapest exact shape at every measured scale.
-    anchors = substring_anchors(df, id_col, text_col, gram).localCheckpoint(eager=True)
+    anchors = session.materialize(substring_anchors(df, id_col, text_col, gram))
     # SCALE HAZARD (found at sf10, r9): localCheckpoint REPLACES the plan
     # with a LogicalRDD whose size estimate comes from the in-memory
     # block accounting — measured 1.8 MB for 13.2M anchor rows at sf1 —
@@ -897,7 +904,7 @@ def cross_duplicate_spans(corpus: DataFrame, benchmark: DataFrame,
         # post-checkpoint stats are bogus-small (see duplicate_span_pairs):
         # pin the data-sized sizes join to sort-merge so it can't broadcast
         # (and can spill, unlike shuffle_hash — the sf10 lesson)
-        a = a.localCheckpoint(eager=True)
+        a = session.materialize(a)
         sizes = a.groupBy("h").agg(F.count(F.lit(1)).alias("_n"))
         a = (
             a.join(sizes.hint("merge"), "h")

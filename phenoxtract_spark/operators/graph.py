@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import session
+
 _CONTRIB_DEC = "decimal(28,12)"
 
 
@@ -58,11 +60,10 @@ def pagerank(
     # materialize edges+degree once: candidate generation is the expensive
     # subtree and must not replay per round; the shuffle partitioning on
     # src survives the checkpoint and co-locates every round's rank join
-    edges_deg = (
+    edges_deg = session.materialize(
         sym.join(deg, sym.src == deg.d_src)
         .select("src", "dst", "deg")
         .repartition("src")
-        .localCheckpoint(eager=True)
     )
     ids = vertices.select(F.col(id_col).alias("id"))
     ranks = ids.withColumn("rank", F.lit(1.0))
@@ -81,7 +82,7 @@ def pagerank(
         # reads ``ids`` via ``ranks``'s lineage-free checkpoint parent
         # (ranks itself is built from ids, so the id set is identical).
         prev_ids = ranks.select("id")
-        ranks = (
+        ranks = session.materialize(
             prev_ids.join(summed, prev_ids.id == summed.dst, "left")
             .select(
                 "id",
@@ -91,7 +92,6 @@ def pagerank(
                     round_dp,
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
     return ranks
 
@@ -112,18 +112,20 @@ def hierarchy_resolve(nodes: DataFrame, id_col: str, parent_col: str,
     no driver-side traversal.  The recursive-CTE oracle walks the same
     forest one level at a time."""
     p = F.coalesce(F.col(parent_col), F.lit(0))
-    state = nodes.select(
-        F.col(id_col).alias("id"),
-        F.when(p == 0, F.lit(0)).otherwise(p).cast("bigint").alias("anc"),
-        F.lit(1).cast("bigint").alias("d"),
-        F.when(p == 0, F.col(id_col).cast("bigint")).alias("root"),
-    ).localCheckpoint(eager=True)
+    state = session.materialize(
+        nodes.select(
+            F.col(id_col).alias("id"),
+            F.when(p == 0, F.lit(0)).otherwise(p).cast("bigint").alias("anc"),
+            F.lit(1).cast("bigint").alias("d"),
+            F.when(p == 0, F.col(id_col).cast("bigint")).alias("root"),
+        )
+    )
     for _ in range(rounds):
         t = state.select(
             F.col("id").alias("t_id"), F.col("anc").alias("t_anc"),
             F.col("d").alias("t_d"), F.col("root").alias("t_root"),
         )
-        state = (
+        state = session.materialize(
             state.join(t, state["anc"] == t["t_id"], "left")
             .select(
                 "id",
@@ -134,7 +136,6 @@ def hierarchy_resolve(nodes: DataFrame, id_col: str, parent_col: str,
                 F.when(F.col("anc") == 0, F.col("root"))
                 .otherwise(F.col("t_root")).alias("root"),
             )
-            .localCheckpoint(eager=True)
         )
     unresolved = state.filter(F.col("anc") != 0).limit(1).count()
     if unresolved:
@@ -169,12 +170,11 @@ def onion_peel(nodes: DataFrame, pairs: DataFrame, k: int = 2,
     keyed by node id; the alive set shrinks monotonically.  Rounds are
     checkpointed (dimension-to-table-sized state) so round r's plan
     does not contain rounds 1..r-1."""
-    sym = (
+    sym = session.materialize(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
-        .localCheckpoint(eager=True)
     )
     alive = nodes.select(F.col(id_col).alias("id"))
     peeled_layers = None
@@ -196,9 +196,7 @@ def onion_peel(nodes: DataFrame, pairs: DataFrame, k: int = 2,
             peeled if peeled_layers is None
             else peeled_layers.unionByName(peeled)
         )
-        alive = tagged.filter(F.col("_deg") >= k).select("id").localCheckpoint(
-            eager=True
-        )
+        alive = session.materialize(tagged.filter(F.col("_deg") >= k).select("id"))
     core = alive.select("id", F.lit(0).cast("bigint").alias("peel_round"))
     return (
         peeled_layers.unionByName(core)

@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import session
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<numeric> columns, accumulated in double."""
@@ -234,9 +236,7 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, centroids: DataFrame,
     # and the query-side joins below — materialize its two-column output
     # once so the expensive pass can never execute twice (r5: measured
     # 5-8 s → ~2.5 s at sf1; the r4 one-shot 4.7 s was this re-execution)
-    assign = assign_ivf_centroid(vectors, centroids, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
+    assign = session.materialize(assign_ivf_centroid(vectors, centroids, id_col, vec_col))
     v = vectors.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
@@ -359,9 +359,7 @@ def ivfpq_topk(vectors: DataFrame, queries: DataFrame, centroids: DataFrame,
             f"dim {CB.shape[1]} not divisible by num_subspaces {M}"
         )
     scale = 10.0 ** round_dp
-    assign = assign_ivf_centroid(vectors, centroids, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
+    assign = session.materialize(assign_ivf_centroid(vectors, centroids, id_col, vec_col))
     # same queries-are-the-corpus guard as ivf_topk (r5 ADVICE): a
     # distinct queries frame always gets its own assignment pass
     qassign = (
@@ -615,8 +613,8 @@ def hyperplane_candidate_pairs(vectors: DataFrame, dim: int, num_planes: int = 1
 
     # (id, sig) is narrow but its subtree is the plane-projection pass;
     # banded_pairs consumes it on both join sides — materialize once
-    sig = hyperplane_signature(vectors, dim, num_planes, id_col, vec_col, seed).localCheckpoint(
-        eager=True
+    sig = session.materialize(
+        hyperplane_signature(vectors, dim, num_planes, id_col, vec_col, seed)
     )
     return banded_pairs(sig, bits=num_planes, band_width=rows_per_band,
                         id_col="id", fp_col="sig")
@@ -821,11 +819,13 @@ def ring_negatives(df: DataFrame, id_col: str = "vec_id",
     )
     w = Window.partitionBy("shard").orderBy("_h", "id")
     wn = Window.partitionBy("shard")
-    ranked = base.select(
-        "id", "lbl", "shard",
-        F.row_number().over(w).alias("pos"),
-        F.count(F.lit(1)).over(wn).alias("cnt"),
-    ).localCheckpoint(eager=True)  # feeds both join sides
+    ranked = session.materialize(
+        base.select(
+            "id", "lbl", "shard",
+            F.row_number().over(w).alias("pos"),
+            F.count(F.lit(1)).over(wn).alias("cnt"),
+        )
+    )  # feeds both join sides
     anchors = ranked.select(
         F.col("id").alias("anchor_id"),
         F.col("lbl").alias("alabel"),

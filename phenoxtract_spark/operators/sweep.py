@@ -26,20 +26,17 @@ Without materialization the offsets dim is a SECOND branch over the
 input, and column pruning makes the two subtrees differ, so Catalyst's
 exchange reuse cannot deduplicate them — the input would be scanned and
 aggregated twice (measured on the rank-sum plan: 4 source scans).  The
-``materialize`` modes fix that with the repo's eager-checkpoint
-discipline:
+``materialize`` mode picks the evaluation shape:
 
 - ``"offsets"`` — for big PROJECTION inputs (a corpus with a hash
   bucket): run the per-bucket totals as their own tiny eager job and
-  checkpoint the ≤ n_buckets-row offsets dim; the main plan is then
-  scan → broadcast join → one bucket-keyed window.  Two column-pruned
-  scans total, zero recomputation.
-- ``"input"`` — for inputs that are themselves expensive subplans (a
-  groupBy cells relation): checkpoint the input once; every downstream
-  branch (offsets, stats, window) reads the materialized relation, so
-  the expensive subplan runs exactly once.
+  store the ≤ n_buckets-row offsets dim (``session.materialize``); the
+  main plan is then scan → broadcast join → one bucket-keyed window.
+  Two column-pruned scans total, zero recomputation.
 - ``"none"`` — fully declarative; correct but with the double-branch
-  cost.  Values are identical in all three modes.
+  cost, unless the caller passes an input it already materialized (a
+  groupBy cells relation), which every branch then reads.  Values are
+  identical in both modes.
 """
 
 from __future__ import annotations
@@ -47,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .. import session
 
 
 def bucketed_prefix_sum(
@@ -91,8 +90,8 @@ def bucketed_prefix_sum(
     data pass under ``materialize="offsets"`` (checkpointed dim) or
     when the input is already materialized; with ``materialize="none"``
     on a raw scan the gt branch re-aggregates the input.
-    ``materialize`` picks the evaluation shape — see the module
-    docstring; values are identical in all modes.
+    ``materialize`` (``"none"`` or ``"offsets"``) picks the evaluation
+    shape — see the module docstring; values are identical in both.
 
     ``offsets_from`` (r12, guide §2.4): build the per-bucket totals dim
     from this relation instead of ``df``.  For a ``df`` that is itself a
@@ -119,7 +118,7 @@ def bucketed_prefix_sum(
     must be (a NULL group would drop out of the offsets equi-join);
     the same runtime guard enforces both.
     """
-    if materialize not in ("none", "input", "offsets"):
+    if materialize not in ("none", "offsets"):
         raise ValueError(f"unknown materialize mode: {materialize!r}")
     # fail fast on generated-name collisions (same discipline as the
     # materialize-mode check): an input that already carries e.g. a
@@ -139,8 +138,6 @@ def bucketed_prefix_sum(
             f"bucketed_prefix_sum: input columns collide with generated "
             f"names {clashes}; rename them first"
         )
-    if materialize == "input":
-        df = df.localCheckpoint()
 
     # NULL-key enforcement is STRUCTURAL (see the left-join comment
     # below): guard expressions placed in the pre-join projection are
@@ -207,7 +204,7 @@ def bucketed_prefix_sum(
         ],
     )
     if materialize == "offsets":
-        offsets = offsets.localCheckpoint()  # <= n_groups*n_buckets rows, eager
+        offsets = session.materialize(offsets)  # <= n_groups*n_buckets rows, eager
 
     win = (
         Window.partitionBy(*parts, bucket_col)
@@ -448,7 +445,7 @@ def value_range_buckets(
     # eager checkpoint is a tiny job and both branches then scan the
     # materialized dim.  Join semantics (LEFT, NULL-group kept with NULL
     # bk) are unchanged.
-    stats = df.groupBy(*parts).agg(*stat_aggs).localCheckpoint()
+    stats = session.materialize(df.groupBy(*parts).agg(*stat_aggs))
     # Overflow-safe: ``(v - lo) * 2^bits`` in raw BIGINT wraps silently
     # in non-ANSI Spark once the column's range exceeds ~2^63/2^bits
     # (~3.6e16 at bits=8), producing non-monotone buckets and silently

@@ -10,6 +10,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import session
 from .dedup import normalized_text, shingles
 
 # Small stopword vocabularies per language for the n-gram/stopword-vote
@@ -160,9 +161,7 @@ def tfidf_topk(df: DataFrame, id_col: str, text_col: str, k: int = 3,
     # tf feeds both the scoring join and the document-frequency dim —
     # materialize once so the explode + (doc, term) shuffle can never
     # re-execute per consumption
-    tf = toks.groupBy("id", "tok").agg(F.count("*").alias("tf")).localCheckpoint(
-        eager=True
-    )
+    tf = session.materialize(toks.groupBy("id", "tok").agg(F.count("*").alias("tf")))
     dfreq = tf.groupBy("tok").agg(F.count("*").alias("df"))
     n_docs = df.agg(F.count("*").alias("_n"))
     scored = (
@@ -203,9 +202,7 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str,
     toks = tokens_long(df, id_col, text_col)
     # the vocabulary dim feeds two separate broadcasts (counts + total);
     # materialize it once so the token pass behind it runs once
-    counts = toks.groupBy("tok").agg(F.count("*").alias("_cnt")).localCheckpoint(
-        eager=True
-    )
+    counts = session.materialize(toks.groupBy("tok").agg(F.count("*").alias("_cnt")))
     # corpus total = Σ over the vocabulary dim — one-row aggregate of the
     # SMALL side, not a third full pass over the token stream
     total = counts.agg(F.sum("_cnt").alias("_tot"))
@@ -259,9 +256,7 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str,
     ).select("id", F.col("bg.prev").alias("prev"), F.col("bg.tok").alias("tok"))
     # the bigram dim feeds two separate broadcasts (itself + the context
     # rollup); materialize it once so the pair pass behind it runs once
-    bg_counts = pairs.groupBy("prev", "tok").agg(F.count("*").alias("_bg")).localCheckpoint(
-        eager=True
-    )
+    bg_counts = session.materialize(pairs.groupBy("prev", "tok").agg(F.count("*").alias("_bg")))
     # context totals roll up from the bigram dim (Σ_tok count(prev,tok) ==
     # count(prev)) — an aggregate over the SMALL side, not a third full
     # pass over the pair stream
@@ -332,7 +327,7 @@ def bpe_merges(df: DataFrame, text_col: str, rounds: int = 3) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("freq"))
     )
     chars = F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-    cur = wf.select("freq", chars.alias("s")).localCheckpoint(eager=True)
+    cur = session.materialize(wf.select("freq", chars.alias("s")))
     out: list[tuple[int, str, str, int]] = []
     for r in range(1, rounds + 1):
         pairs = cur.select(
@@ -372,7 +367,7 @@ def bpe_merges(df: DataFrame, text_col: str, rounds: int = 3) -> DataFrame:
                 ),
             ).otherwise(F.concat(acc, F.array(x))),
         )
-        cur = cur.select("freq", merged.alias("s")).localCheckpoint(eager=True)
+        cur = session.materialize(cur.select("freq", merged.alias("s")))
     return spark.createDataFrame(
         out, "merge_round int, sym_a string, sym_b string, pair_count bigint"
     )
@@ -445,9 +440,7 @@ def bm25_topk(df: DataFrame, id_col: str, text_col: str,
     toks = tokens_long(df, id_col, text_col)
     # (doc, term) counts feed the query restriction AND doc lengths —
     # materialize once (same discipline as tfidf_topk)
-    tf = toks.groupBy("id", "tok").agg(F.count("*").alias("tf")).localCheckpoint(
-        eager=True
-    )
+    tf = session.materialize(toks.groupBy("id", "tok").agg(F.count("*").alias("tf")))
     dl = tf.groupBy("id").agg(F.sum("tf").cast("bigint").alias("dl"))
     stats = dl.agg(
         F.count("*").cast("bigint").alias("n_docs"), F.avg("dl").alias("avgdl")
@@ -582,9 +575,7 @@ def token_jaccard_topk(df: DataFrame, id_col: str, text_col: str,
     sharing >= 1 token with a query ever materialize a pair (inverted-
     index semantics for free).  Scores round before ranking, ties break
     by neighbor id.  Returns (query_id, neighbor_id, jaccard, rank)."""
-    dtoks = tokens_long(df, id_col, text_col).distinct().localCheckpoint(
-        eager=True
-    )
+    dtoks = session.materialize(tokens_long(df, id_col, text_col).distinct())
     sizes = dtoks.groupBy("id").agg(
         F.count(F.lit(1)).cast("bigint").alias("sz")
     )
@@ -640,14 +631,14 @@ def bigram_lm_dims(train: DataFrame, id_col: str,
     stragglers) and inject the result via ``cross_entropy_score``'s
     ``model=``; relations and values are identical either way."""
     ttoks = _toks_pos(train, id_col, text_col)
-    vocab = ttoks.select("tok").distinct().localCheckpoint(eager=True)
+    vocab = session.materialize(ttoks.select("tok").distinct())
     w = Window.partitionBy("id").orderBy("pos")
     tpairs = ttoks.withColumn("prev", F.lag("tok").over(w)).filter(
         F.col("prev").isNotNull()
     )
-    bg = tpairs.groupBy("prev", "tok").agg(
-        F.count(F.lit(1)).cast("double").alias("_bg")
-    ).localCheckpoint(eager=True)
+    bg = session.materialize(
+        tpairs.groupBy("prev", "tok").agg(F.count(F.lit(1)).cast("double").alias("_bg"))
+    )
     return vocab, bg
 
 

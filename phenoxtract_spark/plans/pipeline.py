@@ -34,11 +34,11 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import session
 from ..descriptors import ContextKind, ContextualizedDataFrame
 from ..errors import ErrorLedger
 from ..functions import casting, cleaning
 from ..operators import packet as packet_ops
-from ..session import materialize
 from . import collectors
 from .strategies import Strategy
 
@@ -86,7 +86,7 @@ class Pipeline:
                 cdfs = s.apply(cdfs, self.ledger)
         # the barrier (module docstring): also when no strategy ran, since
         # the collectors would still re-run the preprocess casts
-        cdfs = [cdf.with_df(materialize(cdf.df)) for cdf in cdfs]
+        cdfs = [cdf.with_df(session.materialize(cdf.df)) for cdf in cdfs]
         self.ledger.validate()
         return cdfs
 

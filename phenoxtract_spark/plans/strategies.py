@@ -381,13 +381,15 @@ class MultiHpoColExpansionStrategy(Strategy):
                 long = pivoting.explode_multi_ids(df, subj, col, extract_hpo_ids)
                 # column order = global first occurrence (row-major, like the
                 # reference's insertion-ordered header map); row component =
-                # ingest rownum when captured, else the subject key
+                # ingest rownum when captured, else the subject key, zero-padded
+                # to at least 12 characters (lpad truncates to its length)
                 from ..sources.readers import INGEST_ROWNUM
 
+                sid = F.col(subj).cast("string")
                 row_ord = (
                     F.col(INGEST_ROWNUM)
                     if INGEST_ROWNUM in df.columns
-                    else F.lpad(F.col(subj).cast("string"), 12, "0")
+                    else F.lpad(sid, F.greatest(F.length(sid), F.lit(12)), "0")
                 )
                 occurrences = df.select(
                     row_ord.alias("_ro"),

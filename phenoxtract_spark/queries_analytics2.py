@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from . import session
 from .queries_core import q, read_table
 
 
@@ -780,14 +781,14 @@ def analytics_share_shift(spark, sf_dir):
         F.lit("early"),
     ).otherwise(F.lit("late"))
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-    per = (
+    per = session.materialize(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .select("n_name", era.alias("era"), rev.alias("rev"))
         .groupBy("n_name", "era")
         .agg(F.sum("rev").alias("rev"))
-    ).localCheckpoint(eager=True)  # feeds shares + era totals
+    )  # feeds shares + era totals
     tot = per.groupBy("era").agg(F.sum("rev").alias("tot"))
     shares = per.join(F.broadcast(tot), "era").select(
         "n_name", "era",
@@ -987,26 +988,24 @@ def profiling_quantiles_distributed_q(spark, sf_dir):
     semantics, no interpolation, so both engines agree to the cent.
 
     Scale shape: one map-side-combinable groupBy to per-distinct-value
-    cells (checkpointed once, the sweep's materialize="input"
-    discipline), then the CDF is the two-phase bucketed_prefix_sum over
-    256 value-range buckets — the rank scan is distributed, each task
-    holding ~1/256 of the distinct values; the 5-row quantile dim
-    broadcasts and the containment filter (cum-n < r <= cum) selects
-    exactly one cell per q.  Selection beats sorting: total work is one
-    shuffle by value + cell-local arithmetic, vs a full range-partition
-    sort for orderBy-then-row_number."""
+    cells (materialized once), then the CDF is the two-phase
+    bucketed_prefix_sum over 256 value-range buckets — the rank scan is
+    distributed, each task holding ~1/256 of the distinct values; the
+    5-row quantile dim broadcasts and the containment filter
+    (cum-n < r <= cum) selects exactly one cell per q.  Selection beats
+    sorting: total work is one shuffle by value + cell-local arithmetic,
+    vs a full range-partition sort for orderBy-then-row_number."""
     from pyspark.sql import Row
 
     from .operators import sweep
 
     li = read_table(spark, sf_dir, "lineitem")
-    cells = (
+    cells = session.materialize(
         li.select(
             F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents")
         )
         .groupBy("cents")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint()
     )
     # r12: the grand total rides the value-range stats pass (one fewer
     # aggregation branch + broadcast than the ``totals`` path — see
@@ -1088,12 +1087,11 @@ def profiling_quantiles_grouped(spark, sf_dir):
     lag = F.datediff(
         F.col("l_shipdate").cast("date"), F.col("o_orderdate").cast("date")
     )
-    cells = (
+    cells = session.materialize(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_orderpriority").alias("prio"), lag.alias("lag_days"))
         .groupBy("prio", "lag_days")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint()
     )
     # r12: the per-group total rides the per-group stats dim
     # (extra_stats) instead of the partitioned-totals join branch
@@ -1176,13 +1174,12 @@ def profiling_gini_concentration_q(spark, sf_dir):
     from .operators import sweep
 
     o = read_table(spark, sf_dir, "orders")
-    per = (
+    per = session.materialize(
         o.groupBy("o_custkey")
         .agg(
             F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
             .cast("bigint").alias("cents")
         )
-        .localCheckpoint()
     )
     b = sweep.value_range_buckets(per, "cents")
     # the prefix-sum relation feeds BOTH the (n, sx, srx) totals
@@ -1190,10 +1187,12 @@ def profiling_gini_concentration_q(spark, sf_dir):
     # materialization the post-cells window pipeline executes twice
     # (two ~1.9 s jobs measured at sf0.1).  Same discipline as the
     # spine's own cells checkpoint (r12).
-    c = sweep.bucketed_prefix_sum(
-        b, "bk", ["cents", "o_custkey"], {"one": F.lit(1).cast("bigint"),
-                                          "cents": "cents"}
-    ).localCheckpoint(eager=True)
+    c = session.materialize(
+        sweep.bucketed_prefix_sum(
+            b, "bk", ["cents", "o_custkey"], {"one": F.lit(1).cast("bigint"),
+                                              "cents": "cents"}
+        )
+    )
     tot = c.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum("cents").cast("decimal(38,0)").alias("sx"),
@@ -1305,13 +1304,12 @@ def profiling_mad_outliers_q(spark, sf_dir):
     from .operators import sweep
 
     li = read_table(spark, sf_dir, "lineitem")
-    cells = (
+    cells = session.materialize(
         li.select(
             F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents")
         )
         .groupBy("cents")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint()
     )
     # pass 1: type-1 lower median by rank selection over the bucketed
     # CDF; rank r = (t-1) DIV 2 + 1 (sweep.rank_containment — the ONE
@@ -1326,13 +1324,12 @@ def profiling_mad_outliers_q(spark, sf_dir):
     )
     # deviation cells CARRY (med, n_total) as constant columns — the
     # 1-row median subtree above is consumed exactly here, once
-    dcells = (
+    dcells = session.materialize(
         cells.crossJoin(F.broadcast(med))
         .groupBy(
             F.abs(F.col("cents") - F.col("med")).alias("dev"), "med", "n_total"
         )
         .agg(F.sum("n").cast("bigint").alias("n"))
-        .localCheckpoint()
     )
     # pass 2: median of deviations = MAD, same rank rule, rank from the
     # carried n_total (no re-aggregation anywhere)

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from . import session
 from .operators import behavior
 from .queries_core import q, read_table
 
@@ -424,7 +425,7 @@ def events_audience_overlap(spark, sf_dir):
     100 TB swap exact distinct-user sets for the KMV sketch per type and
     intersect via inclusion-exclusion on merged sketches."""
     e = read_table(spark, sf_dir, "events")
-    du = e.select("event_type", "user_id").distinct().localCheckpoint(eager=True)
+    du = session.materialize(e.select("event_type", "user_id").distinct())
     sizes = du.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     a = du.select(F.col("event_type").alias("type_a"), "user_id")
     b = du.select(F.col("event_type").alias("type_b"), "user_id")
@@ -564,11 +565,11 @@ def events_audience_overlap_sketch(spark, sf_dir):
     h = F.md5(F.concat_ws("|", F.lit("kmv-v1"), F.col("user_id").cast("string")))
     u52 = F.conv(F.substring(h, 1, 13), 16, 10).cast("bigint")
     bucket = F.pmod(F.conv(F.substring(h, 14, 2), 16, 10).cast("bigint"), F.lit(m))
-    mins = (
+    mins = session.materialize(
         e.select("event_type", u52.alias("_u"), bucket.alias("_b"))
         .groupBy("event_type", "_b")
         .agg(F.min("_u").alias("_umin"))
-    ).localCheckpoint(eager=True)  # feeds singles + merged pair sketches
+    )  # feeds singles + merged pair sketches
 
     def estimator():
         two52 = float(1 << 52)
@@ -1479,10 +1480,12 @@ def analytics_chi2_independence_q(spark, sf_dir):
     o = read_table(spark, sf_dir, "orders")
     # the ONE data pass; 15 rows out — checkpointed so the grid's three
     # re-aggregations read the materialized cells, never the source
-    cells = o.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.col("o_orderstatus").alias("status"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("observed")).localCheckpoint()
+    cells = session.materialize(
+        o.groupBy(
+            F.col("o_orderpriority").alias("priority"),
+            F.col("o_orderstatus").alias("status"),
+        ).agg(F.count(F.lit(1)).cast("bigint").alias("observed"))
+    )
     rowt = cells.groupBy("priority").agg(
         F.sum("observed").cast("bigint").alias("r"))
     colt = cells.groupBy("status").agg(
@@ -1569,8 +1572,8 @@ def analytics_rank_sum_test_q(spark, sf_dir):
     broadcast) — the |distinct values| relation is never in one task.
     The cells relation is an expensive subplan feeding three consumers
     (min/max stats, the bucket-totals dim, the window), so it is
-    eagerly checkpointed once (sweep's materialize="input" discipline)
-    — the source is scanned and aggregated exactly once
+    eagerly materialized once (``session.materialize``) — the source is
+    scanned and aggregated exactly once
     (unmaterialized, column pruning forks the subtree and the scan ran
     4x: measured, module docstring of sweep).
     Sums fit int64 through ~3e9 rows (r1_x2 <= n1*(2t+1)); past that the
@@ -1584,10 +1587,12 @@ def analytics_rank_sum_test_q(spark, sf_dir):
             F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), F.lit(1)
         ).otherwise(F.lit(0)).alias("g"),
     )
-    cells = base.groupBy("cents").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("g").cast("bigint").alias("n1"),
-    ).localCheckpoint()
+    cells = session.materialize(
+        base.groupBy("cents").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum("g").cast("bigint").alias("n1"),
+        )
+    )
     b = sweep.value_range_buckets(cells, "cents")
     c = sweep.bucketed_prefix_sum(b, "bk", ["cents"], {"n": "n"})
     r = c.withColumn("r2", 2 * F.col("cum_n") - F.col("n") + 1)
@@ -1661,14 +1666,13 @@ def analytics_kruskal_wallis_q(spark, sf_dir):
     from .operators import sweep
 
     o = read_table(spark, sf_dir, "orders")
-    gc = (
+    gc = session.materialize(
         o.select(
             F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
             F.col("o_orderpriority").alias("grp"),
         )
         .groupBy("cents", "grp")
         .agg(F.count(F.lit(1)).cast("bigint").alias("ng"))
-        .localCheckpoint()
     )
     vc = gc.groupBy("cents").agg(F.sum("ng").cast("bigint").alias("n"))
     b = sweep.value_range_buckets(vc, "cents")
@@ -1732,9 +1736,9 @@ def analytics_rfm_scalable(spark, sf_dir):
     sweep's NULL-bucket guard turns that case into a loud runtime error
     rather than a silent rank divergence — the engine's "error, never
     wrong values" discipline.  The relation re-materializes
-    between the three passes (localCheckpoint) so each pass's stats +
-    offsets jobs read the previous materialization instead of replaying
-    upstream windows — the sweep module's "input" discipline; at
+    between the three passes (``session.materialize``) so each pass's
+    stats + offsets jobs read the previous materialization instead of
+    replaying upstream windows; at
     cluster scale the checkpoint is a narrow per-customer relation,
     orders of magnitude under the orders table it aggregates."""
     from .operators import sweep
@@ -1765,9 +1769,9 @@ def analytics_rfm_scalable(spark, sf_dir):
         ("f_score", "frequency", "rf"),
         ("m_score", "monetary_cents", "rm"),
     ]
-    cur = base.withColumn(
-        "_r_days", F.unix_date(F.col("last_order")).cast("bigint")
-    ).localCheckpoint()
+    cur = session.materialize(
+        base.withColumn("_r_days", F.unix_date(F.col("last_order")).cast("bigint"))
+    )
     # r12 (guide §2.4): the passes were CHAINED THROUGH CHECKPOINTS — each
     # re-materialized the full-width relation so the NEXT pass's eager
     # stats + offsets jobs would not replay its windows.  Injection makes

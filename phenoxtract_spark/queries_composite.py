@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from . import session
 from .operators import curation, dedup
 from .queries_core import q, read_table
 from .queries_scale import _NORM, _SHINGLES3
@@ -532,7 +533,7 @@ def dedup_pair_features(spark, sf_dir):
     sig = dedup.minhash_signature(d, "doc_id", "text", num_hashes=4, k=3)
     cand = dedup.lsh_candidate_pairs(dedup.lsh_bands(sig, rows_per_band=2))
     ov = dedup._pair_overlaps(d, "doc_id", "text", k=3, candidates=cand)
-    fp = dedup.simhash(d, "doc_id", "text", bits=60).localCheckpoint(eager=True)
+    fp = session.materialize(dedup.simhash(d, "doc_id", "text", bits=60))
     lens = d.select("doc_id", "n_chars")
     fa = fp.select(F.col("id").alias("id_a"), F.col("simhash").alias("_fa"))
     fb = fp.select(F.col("id").alias("id_b"), F.col("simhash").alias("_fb"))
@@ -737,9 +738,9 @@ def dedup_minhash_estimator_quality(spark, sf_dir):
     is exactly the trade the report quantifies."""
     d = read_table(spark, sf_dir, "documents")
     sig4 = dedup.minhash_signature(d, "doc_id", "text", num_hashes=4, k=3)
-    cand = dedup.lsh_candidate_pairs(
-        dedup.lsh_bands(sig4, rows_per_band=2)
-    ).localCheckpoint(eager=True)  # three consumers below
+    cand = session.materialize(
+        dedup.lsh_candidate_pairs(dedup.lsh_bands(sig4, rows_per_band=2))
+    )  # three consumers below
     wsig = dedup.minhash_signature(d, "doc_id", "text", num_hashes=16, k=3)
     a = wsig.select(F.col("id").alias("id_a"), "seed",
                     F.col("minhash").alias("_ma"))

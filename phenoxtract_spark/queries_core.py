@@ -75,19 +75,15 @@ SINGLE_TASK_PINS: dict[str, str] = {
     "analytics_rank_sum_test": "sweep offsets dim window (<=2^bits rows)",
     "analytics_kruskal_wallis": "sweep offsets dim window (<=2^bits rows)",
     "profiling_quantiles_distributed": "sweep offsets dim window (<=2^bits rows)",
-    # r13: the scale audit now follows localCheckpoint parents (r12
-    # verdict item 5), so the sweep offsets windows that execute INSIDE
-    # eager checkpoints are back on the ledger — same <=2^bits
-    # dim-boundedness as the rest of the spine
+    # the scale audit follows session.materialize parents, so the sweep
+    # offsets windows that execute INSIDE eager barriers are on the
+    # ledger too — same <=2^bits dim-boundedness as the rest of the spine
     "profiling_gini_concentration": "sweep offsets dim window (<=2^bits "
-                                    "rows), inside the prefix-sum "
-                                    "checkpoint (r13 pre-ckpt audit)",
+                                    "rows), inside the prefix-sum barrier",
     "analytics_rfm_scalable": "sweep offsets dim windows (<=2^bits rows "
-                              "per pass), inside the offsets "
-                              "checkpoints (r13 pre-ckpt audit)",
+                              "per pass), inside the offsets barriers",
     "curation_pps_sample": "sweep offsets dim window (<=2^bits rows), "
-                           "inside the offsets checkpoint (r13 "
-                           "pre-ckpt audit)",
+                           "inside the offsets barrier",
     "profiling_mad_outliers": "sweep offsets dim window (<=2^bits rows)",
     "profiling_histogram_equidepth": "sweep offsets dim window (<=2^bits rows)",
     # --- other bounded unpartitioned windows (audited r10, re-audited r11)

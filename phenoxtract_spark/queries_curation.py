@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from . import session
 from .operators import curation
 from .operators import dedup
 from .queries_core import q, read_table
@@ -994,11 +995,7 @@ def text_cooccurrence_pmi(spark, sf_dir):
     ).select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     # the unfloored pair counts feed both the heavy-hitter set AND the
     # pre-floor total — materialize once
-    pc_all = (
-        pairs.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-        .localCheckpoint(eager=True)
-    )
+    pc_all = session.materialize(pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair")))
     pc = pc_all.filter(F.col("n_pair") >= 5)
     uni = (
         t.select(F.explode("t").alias("tok"))
@@ -2003,9 +2000,7 @@ def _web_pipeline_stages(spark, sf_dir, gzip_members=False):
         _lm_fut = _pool.submit(
             textanalysis.bigram_lm_dims, ref, "doc_id", "text"
         )
-        s2 = s1.filter(
-            textanalysis.detect_language("text") == "en"
-        ).localCheckpoint(eager=True)
+        s2 = session.materialize(s1.filter(textanalysis.detect_language("text") == "en"))
         lm = _lm_fut.result()
 
     # stage 3: Gopher rules, relaxed to <=1 failed rule
@@ -2021,12 +2016,14 @@ def _web_pipeline_stages(spark, sf_dir, gzip_members=False):
                                            model=lm)
     # checkpointed: four downstream consumers (minhash signatures, both
     # sides of the Jaccard verify, the canonical join) diverge here
-    s4 = s3.join(
-        ces.filter(F.col("cross_entropy") <= 3.49).select(
-            F.col("id").alias("doc_id")
-        ),
-        "doc_id",
-    ).localCheckpoint(eager=True)
+    s4 = session.materialize(
+        s3.join(
+            ces.filter(F.col("cross_entropy") <= 3.49).select(
+                F.col("id").alias("doc_id")
+            ),
+            "doc_id",
+        )
+    )
 
     # stage 5: MinHash-LSH near-dup dedup (keep the min id of each pair)
     sg = dedup.minhash_signature(s4, "doc_id", "text", num_hashes=4, k=3)
@@ -2048,10 +2045,12 @@ def _web_pipeline_stages(spark, sf_dir, gzip_members=False):
     # checkpointed: the decontamination anchors and the survivor join
     # both consume s5, and recomputing it means re-running the LSH
     # verify self-join
-    s5 = s4.join(
-        canon5.filter(F.col("canonical_id") == F.col("doc_id")).select("doc_id"),
-        "doc_id",
-    ).localCheckpoint(eager=True)
+    s5 = session.materialize(
+        s4.join(
+            canon5.filter(F.col("canonical_id") == F.col("doc_id")).select("doc_id"),
+            "doc_id",
+        )
+    )
 
     # stage 6: exact-substring decontamination vs the benchmark split
     hits = (

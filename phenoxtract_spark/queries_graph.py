@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from . import session
 from .operators import dedup, graph
 from .queries_core import q, read_table
 from .queries_scale import _SHINGLES3
@@ -143,7 +144,7 @@ def graph_triangle_count(spark, sf_dir):
     d = read_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signature(d, "doc_id", "text", num_hashes=4, k=3)
     cand = dedup.lsh_candidate_pairs(dedup.lsh_bands(sig, rows_per_band=2))
-    cand = cand.localCheckpoint(eager=True)  # three join sides + edge count
+    cand = session.materialize(cand)  # three join sides + edge count
     e1 = cand.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     e2 = cand.select(F.col("id_a").alias("b"), F.col("id_b").alias("c"))
     e3 = cand.select(F.col("id_a").alias("a"), F.col("id_b").alias("c"))

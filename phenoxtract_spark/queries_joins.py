@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from . import session
 from .operators import joins, similarity, skew
 from .queries_core import q, read_table, table_num_rows
 
@@ -330,7 +331,7 @@ def join_bloom_prefilter(spark, sf_dir):
     o = read_table(spark, sf_dir, "orders")
     li = read_table(spark, sf_dir, "lineitem")
     keys = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_orderkey")
-    keys = keys.localCheckpoint(eager=True)  # feeds bloom + exact join + count
+    keys = session.materialize(keys)  # feeds bloom + exact join + count
     bloom = sketches.bloom_build(
         keys, "o_orderkey", num_hashes=4, num_bits=65536, seed="joinbloom-v1"
     )

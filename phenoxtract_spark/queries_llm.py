@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import session
 from .operators import clustering, textanalysis
 from .queries_core import q, read_table, table_num_rows
 
@@ -519,17 +520,17 @@ def embedding_label_propagation(spark, sf_dir):
     # r12 (guide §2.4): label rides the signature kernel's Arrow batch
     # (extra_cols) instead of an id-keyed join-back of the corpus — one
     # full shuffle removed from the checkpointed subtree
-    lab = (
+    lab = session.materialize(
         similarity.hyperplane_signature(e, dim=64, num_planes=4,
                                         extra_cols=["label"])
         .withColumn("unl", split_bucket("id", "mask-v1", buckets=5) == 0)
         .select("id", "sig", "label", "unl")
-    ).localCheckpoint(eager=True)  # feeds votes + masked side
-    votes = (
+    )  # feeds votes + masked side
+    votes = session.materialize(
         lab.filter(~F.col("unl") & F.col("label").isNotNull())
         .groupBy("sig", "label")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    ).localCheckpoint(eager=True)  # feeds majority + totals
+    )  # feeds majority + totals
     w = Window.partitionBy("sig").orderBy(F.desc("cnt"), F.asc("label"))
     maj = (
         votes.withColumn("rn", F.row_number().over(w))

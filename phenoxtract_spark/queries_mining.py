@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from . import session
 from .operators import behavior, curation, dedup, linkage, textanalysis
 from .queries_core import q, read_table
 from .queries_graph import _CAND
@@ -546,9 +547,7 @@ def graph_resource_allocation(spark, sf_dir):
         F.col("c_custkey").alias("id_a"),
         (F.col("c_custkey") + 9).alias("id_b"),
     )
-    cand = chain.unionByName(chords).localCheckpoint(
-        eager=True
-    )  # feeds sym twice + the anti-join
+    cand = session.materialize(chain.unionByName(chords))  # feeds sym twice + the anti-join
     sym = cand.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")) \
         .unionByName(cand.select(F.col("id_b").alias("src"),
                                  F.col("id_a").alias("dst")))
@@ -838,13 +837,12 @@ def profiling_histogram_equidepth(spark, sf_dir):
     from .operators import sweep
 
     o = read_table(spark, sf_dir, "orders")
-    cells = (
+    cells = session.materialize(
         o.select(
             F.round(F.col("o_totalprice") * 100).cast("bigint").alias("xc")
         )
         .groupBy("xc")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint()
     )
     # r12: the grand total rides the stats pass (extra_stats) instead of
     # the totals re-aggregation branch — one fewer pass over the cells
@@ -910,14 +908,13 @@ def profiling_histogram_grouped(spark, sf_dir):
     from .operators import sweep
 
     o = read_table(spark, sf_dir, "orders")
-    cells = (
+    cells = session.materialize(
         o.select(
             F.col("o_orderpriority").alias("seg"),
             F.round(F.col("o_totalprice") * 100).cast("bigint").alias("xc"),
         )
         .groupBy("seg", "xc")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint()
     )
     # r12: the per-group total rides the per-group stats dim
     # (extra_stats) instead of the partitioned-totals join branch
@@ -1172,11 +1169,10 @@ def similarity_mmr_rerank(spark, sf_dir):
     # window task; the shape hid inside this checkpoint until the
     # extended pre-checkpoint scale audit (tests/test_scale_twins.py)
     # flagged it.  Same 20 rows: ties break by id in the same order.
-    cand = (
+    cand = session.materialize(
         rel.orderBy(F.col("rel").desc(), F.col("id"))
         .limit(20)
-        .localCheckpoint(eager=True)  # 20 rows; feeds every round
-    )
+    )  # 20 rows; feeds every round
     ca = cand.select(F.col("id").alias("ia"))
     cb = cand.select(F.col("id").alias("ib"))
     a = vx.join(F.broadcast(ca), vx.vec_id == ca.ia).select(
@@ -1187,7 +1183,7 @@ def similarity_mmr_rerank(spark, sf_dir):
     )
     na = norms.withColumnRenamed("vec_id", "ia").withColumnRenamed("nrm", "na")
     nb = norms.withColumnRenamed("vec_id", "ib").withColumnRenamed("nrm", "nb")
-    sims = (
+    sims = session.materialize(
         a.join(b, (F.col("i") == F.col("ib_i")) & (F.col("ia") != F.col("ib")))
         .groupBy("ia", "ib")
         .agg(F.sum(F.col("xa") * F.col("xb")).alias("_dot"))
@@ -1198,8 +1194,7 @@ def similarity_mmr_rerank(spark, sf_dir):
             F.round(F.col("_dot") / (F.col("na") * F.col("nb")), 6)
             .alias("sim"),
         )
-        .localCheckpoint(eager=True)  # 20×19 rows; probed every round
-    )
+    )  # 20×19 rows; probed every round
     lam, mu = F.lit(0.7), F.lit(0.3)
     s1 = (
         cand.select(
@@ -1235,7 +1230,7 @@ def similarity_mmr_rerank(spark, sf_dir):
         # 1-row eager checkpoint per round: each selection feeds BOTH the
         # output union and every later round's maxsim/anti-join — without
         # it the unrolled plan re-expands all prior rounds (40 exchanges)
-        sr = sr.localCheckpoint(eager=True)
+        sr = session.materialize(sr)
         out = out.unionByName(sr)
         selected = selected.unionByName(sr.select("id"))
     return out.select("rank", F.col("id").alias("vec_id"), "rel", "score")
@@ -1561,9 +1556,9 @@ def curation_dedup_tradeoff(spark, sf_dir):
     d = read_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signature(d, "doc_id", "text", num_hashes=4, k=3)
     cand = dedup.lsh_candidate_pairs(dedup.lsh_bands(sig, rows_per_band=2))
-    jp = dedup.ngram_jaccard_pairs(
-        d, "doc_id", "text", k=3, threshold=0.0, candidates=cand
-    ).localCheckpoint(eager=True)  # one verify pass feeds all 7 thresholds
+    jp = session.materialize(
+        dedup.ngram_jaccard_pairs(d, "doc_id", "text", k=3, threshold=0.0, candidates=cand)
+    )  # one verify pass feeds all 7 thresholds
     thr = spark.range(1).select(
         F.explode(
             F.array(*[F.lit(x) for x in (0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8)])

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from . import session
 from .operators import dedup, multimodal, similarity, textanalysis
 from .queries_core import q, read_table, table_num_rows
 from .streaming import events as ev
@@ -407,9 +408,7 @@ def dedup_substring_shared_report(spark, sf_dir):
     20.9/38.6/53.0 s.  One anchor job, one witness join, |spans|-sized
     materialization."""
     d = read_table(spark, sf_dir, "documents")
-    spans = dedup.duplicate_span_pairs(
-        d, "doc_id", "text", gram=40
-    ).localCheckpoint(eager=True)
+    spans = session.materialize(dedup.duplicate_span_pairs(d, "doc_id", "text", gram=40))
     cov = dedup.duplicated_char_coverage(d, "doc_id", "text", spans=spans)
     clean = dedup.remove_duplicate_spans(d, "doc_id", "text", spans=spans)
     return cov.join(clean.select("id", "clean_len", "clean_md5"), "id")

@@ -132,7 +132,8 @@ def materialize(df):
     looked up by plan, so a later run that re-reads a rewritten file at
     the same path can never be served stale rows, and the blocks are
     freed once the returned DataFrame is unreachable (no release call).
-    This is the one place a materialization policy would be chosen."""
+    The package's only barrier: every caller looks it up as
+    ``session.materialize`` when it runs, so a policy changes here alone."""
     return df.localCheckpoint(eager=True)
 
 

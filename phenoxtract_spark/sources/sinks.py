@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,15 +44,12 @@ def write_file_per_subject(packets: DataFrame, out_dir: str) -> None:
         return obj
 
     def _safe_basename(sid) -> str:
-        # subject ids are arbitrary strings from data: percent-encode
-        # anything that could escape out_dir ('/', '..', control chars)
-        s = str(sid)
-        enc = "".join(
-            c if (c.isalnum() or c in "._-") else f"%{ord(c):02X}" for c in s
-        )
-        if not enc or set(enc) <= {"."}:
-            enc = "_" + enc
-        return enc
+        # subject ids are arbitrary strings from data: percent-encode each
+        # UTF-8 byte outside [A-Za-z0-9._~-] ('/', '%', control chars) and
+        # the dots of an all-dot id, so no name escapes out_dir and
+        # distinct ids never share a file
+        enc = quote(str(sid), safe="")
+        return enc.replace(".", "%2E") if set(enc) <= {"."} else enc
 
     def write_part(rows):
         for row in rows:

@@ -605,3 +605,23 @@ def test_hard_negatives_grid_decomposition_matches_flat(spark, sf_dir, monkeypat
     monkeypatch.setattr(qc, "table_num_rows", lambda sf, t: 16 * 384 * 3 + 1)
     grid = {tuple(r) for r in fn(spark, sf_dir).collect()}
     assert grid == flat and len(flat) > 0
+
+
+# a bigram model built once and passed as ``model=`` scores exactly like
+# the in-line build
+def test_cross_entropy_model_injection_matches_inline_build(spark):
+    docs = spark.createDataFrame(
+        [(i, f"the quick fox {i % 3} jumps over the dog {i % 5}")
+         for i in range(40)],
+        "doc_id bigint, text string",
+    )
+    train = docs.filter(F.col("doc_id") % 10 < 3)
+    score = docs.filter(F.col("doc_id") % 10 >= 3)
+    base = textanalysis.cross_entropy_score(train, score, "doc_id", "text")
+    lm = textanalysis.bigram_lm_dims(train, "doc_id", "text")
+    injected = textanalysis.cross_entropy_score(
+        train, score, "doc_id", "text", model=lm
+    )
+    a = {r["id"]: (r["n_bigrams"], r["cross_entropy"]) for r in base.collect()}
+    b = {r["id"]: (r["n_bigrams"], r["cross_entropy"]) for r in injected.collect()}
+    assert a == b and len(a) > 0

@@ -181,6 +181,26 @@ def test_multi_hpo_key_order_follows_wide_ingest_rownums(spark):
     assert [c for c in out.df.columns if c.startswith("HP:")] == ["HP:0000002", "HP:0000001"]
 
 
+def test_multi_hpo_key_order_with_long_subject_ids(spark):
+    # without ingest row numbers the subject key orders rows; ids longer
+    # than 12 characters that share their first 12 must not tie
+    df = spark.createDataFrame(
+        [("SUBJECT-0000001", "HP:0000005 and HP:0000009"), ("SUBJECT-0000002", "HP:0000003")],
+        "sid string, HPOs string",
+    )
+    ctx = TableContext(
+        name="multi",
+        series_contexts=[
+            sc("sid", ContextKind.SUBJECT_ID),
+            sc("HPOs", ContextKind.MULTI_HPO_ID),
+        ],
+    )
+    [out] = MultiHpoColExpansionStrategy().apply([ContextualizedDataFrame(df=df, context=ctx)])
+    assert [c for c in out.df.columns if c.startswith("HP:")] == [
+        "HP:0000005", "HP:0000009", "HP:0000003",
+    ]
+
+
 def test_individual_fields_and_mapping_strategy(spark):
     demo = spark.createDataFrame(
         [
@@ -288,6 +308,21 @@ def test_file_per_subject_sink(spark, tmp_path):
     with open(f"{out_dir}/P1.json") as f:
         packet = json.load(f)
     assert packet["id"] == "P1"
+
+
+def test_file_per_subject_names_are_injective(spark, tmp_path):
+    # each pair once shared a file name: a space vs U+2001 (one %20 vs a
+    # variable-width %2001 escape), and an all-dot id vs its '_' prefix
+    from phenoxtract_spark.sources.sinks import write_file_per_subject
+
+    ids = ["P 01", "P\u2001", ".", "_."]
+    packets = spark.createDataFrame(
+        [(i, json.dumps({"id": i})) for i in ids], "subject_id string, packet_json string"
+    )
+    write_file_per_subject(packets, str(tmp_path))
+    files = sorted(tmp_path.iterdir())
+    assert len(files) == 4
+    assert sorted(json.loads(f.read_text())["id"] for f in files) == sorted(ids)
 
 
 def test_golden_transposed_xlsx_with_fill_missing(spark, hpo_dim, tmp_path):

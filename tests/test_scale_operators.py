@@ -4,6 +4,7 @@ recall sanity of the approximate paths against exact baselines."""
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from phenoxtract_spark.operators import dedup, multimodal, pivoting, similarity, textanalysis
 
@@ -1234,3 +1235,27 @@ def test_onion_peel_layers_and_core(spark):
     out2 = {r.id: r.in_core
             for r in graph.onion_peel(nodes, edges2, k=2, rounds=8).collect()}
     assert out2[7] is True and 999 not in out2
+
+
+# anchors carry ``pos`` as INT (4 bytes off every row crossing the
+# self-join shuffle) while the span surface contract stays BIGINT
+def test_substring_anchor_pos_is_int_and_span_surface_bigint(spark):
+    shared = "abcdefghijklmnopqrstuvwxyz0123456789ABCD"  # 40 distinct chars
+    df = spark.createDataFrame(
+        [(1, "first-" + shared), (2, shared + "-second"), (3, "zzz")],
+        "doc_id bigint, text string",
+    )
+    anchors = dedup.substring_anchors(df, "doc_id", "text", gram=10)
+    schema = {f.name: f.dataType for f in anchors.schema.fields}
+    assert isinstance(schema["pos"], T.IntegerType), schema["pos"]
+    assert isinstance(schema["h"], T.LongType)
+
+    spans = dedup.duplicate_span_pairs(df, "doc_id", "text", gram=10)
+    sschema = {f.name: f.dataType for f in spans.schema.fields}
+    # the oracle contract: positions and lengths surface as BIGINT
+    for col in ("start_a", "start_b", "span_len"):
+        assert isinstance(sschema[col], T.LongType), (col, sschema[col])
+    rows = spans.collect()
+    assert len(rows) == 1
+    r = rows[0]
+    assert (r.id_a, r.id_b, r.start_a, r.start_b, r.span_len) == (1, 2, 6, 0, 40)

@@ -153,35 +153,29 @@ def test_registry_single_task_shapes_match_declared_ledger(spark, registry):
     registry's plan shapes; the driver-contract schema audit pays the
     same cost for result shapes.)
 
-    r13 (r12 verdict item 5): the audit also captures the plan of every
-    ``localCheckpoint`` PARENT built while the query constructs — an
-    eager mid-plan materialization otherwise HIDES its subtree from the
-    registered plan (the r12 gini precedent: its sweep offsets window
-    moved inside the prefix-sum checkpoint and silently left this
-    ledger).  The flagged set is the union over the final plan and all
-    checkpoint-parent plans, so a single-task shape cannot ship unlisted
-    no matter which side of a materialization barrier it lands on."""
-    # patch the RUNTIME class: under Spark 4 the classic DataFrame
-    # overrides localCheckpoint, so patching the pyspark.sql.DataFrame
-    # base would silently capture nothing (verified: 0 plans captured)
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:  # older layout: one concrete class
-        from pyspark.sql import DataFrame
-
+    The audit also captures the plan of every ``session.materialize``
+    PARENT built while the query constructs — an eager mid-plan
+    materialization otherwise HIDES its subtree from the registered plan
+    (the gini precedent: its sweep offsets window moved inside the
+    prefix-sum checkpoint and silently left this ledger).  The flagged
+    set is the union over the final plan and all materialize-parent
+    plans, so a single-task shape cannot ship unlisted no matter which
+    side of a materialization barrier it lands on.  Every barrier in the
+    package is a ``session.materialize`` call looked up on the module
+    (test_session guards it), so patching that one function sees them
+    all."""
+    from phenoxtract_spark import session
     from phenoxtract_spark.queries_core import SCALE_TWINS, SINGLE_TASK_PINS
 
     captured: list[str] = []
-    orig_ckpt = DataFrame.localCheckpoint
+    orig_materialize = session.materialize
 
-    def probing_ckpt(self, eager=True):
-        captured.append(
-            self._jdf.queryExecution().executedPlan().toString()
-        )
-        return orig_ckpt(self, eager)
+    def probing_materialize(df):
+        captured.append(df._jdf.queryExecution().executedPlan().toString())
+        return orig_materialize(df)
 
     flagged = {}
-    DataFrame.localCheckpoint = probing_ckpt
+    session.materialize = probing_materialize
     try:
         for name, fn in registry.items():
             captured.clear()
@@ -193,7 +187,7 @@ def test_registry_single_task_shapes_match_declared_ledger(spark, registry):
             if fl:
                 flagged[name] = fl
     finally:
-        DataFrame.localCheckpoint = orig_ckpt
+        session.materialize = orig_materialize
 
     declared = set(SCALE_TWINS) | set(SINGLE_TASK_PINS)
     unpaired = {n: f for n, f in flagged.items() if n not in declared}

@@ -25,7 +25,7 @@ def _write(df, tmp_path, name):
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("mode", ["none", "input", "offsets"])
+@pytest.mark.parametrize("mode", ["none", "offsets"])
 def test_bucketed_prefix_sum_matches_global_cumsum(spark, mode):
     from phenoxtract_spark.operators import sweep
 

@@ -34,10 +34,10 @@ def main():
         "joins, scans = parquet scans (pruned column count ≤ table width).",
         "Plans captured BEFORE execution (AQE may further coalesce/replan).",
         "Queries whose expensive narrow relations materialize once",
-        "(localCheckpoint — see README design rule 7: LSH candidates/bands,",
-        "fingerprints, IVF assignments, tf) show only the POST-checkpoint",
-        "plan here: scans/exchanges of the materialized subtree ran in the",
-        "checkpoint job and are audited in the operator docstrings instead.",
+        "(session.materialize — see README design rule 7: LSH candidates/",
+        "bands, fingerprints, IVF assignments, tf) show only the plan after",
+        "that barrier here: scans/exchanges of the materialized subtree ran",
+        "in its eager job and are audited in the operator docstrings instead.",
         "",
         "| query | Ex | BHJ | SMJ | scans (pruned cols) | pushed filters |",
         "|---|---|---|---|---|---|",
