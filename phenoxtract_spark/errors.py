@@ -3,11 +3,12 @@
 A run fails once, listing every offender.  The ``Pipeline`` owns one ledger:
 preprocess casts and strict strategies register a small lazy DataFrame of
 offenders on it, and ``Pipeline.transform`` validates right after its
-barrier — ONE job, one combined :class:`PipelineValidationError`::
+barrier — one action (each limited offender frame still runs as its own
+job), one combined :class:`PipelineValidationError`::
 
     pipe = Pipeline(strategies=[MappingStrategy(spark, kind, SEX_MAP)])
     cdfs = pipe.preprocess(cdfs)   # uncastable:… registered, no action
-    cdfs = pipe.transform(cdfs)    # unmapped:… registered; ONE validation job
+    cdfs = pipe.transform(cdfs)    # unmapped:… registered; one validation action
 
 :func:`strict_check` is the one place a check picks its mode: a standalone
 operator call has no ledger, so it probes now and raises the operator's

@@ -7,17 +7,22 @@ byte-comparable (after volatile-field normalization) with the reference's
 expected fixtures.
 
 Everything is DataFrame-native: label lookups are broadcast dimension
-joins, sections aggregate in ARRIVAL order (the builder's insertion-ordered
-vectors), and the final packet is one nested ``F.struct`` → ``to_json``
-with null/empty fields omitted — one shuffle per section + one per-subject
-assembly join, no driver-side packet building.
+joins, each section is ONE ``groupBy(subject_id)`` in ARRIVAL order (the
+builder's insertion-ordered vectors), the sections left-join onto the
+subject rows, and the packet is one nested ``F.struct`` → ``to_json`` with
+null/empty fields omitted — no driver-side packet building.
 
 Dimensions (all broadcast, offline by design — X3-X5 pre-resolve pattern):
 - ``labels_dim``  (id, label): ontology class labels (HP/MONDO/UO/PATO/LOINC)
 - ``hgnc_dim``    (symbol, hgnc_id)
 - ``hgvs_dim``    (hgvs, expressions array<struct<syntax,value>>,
                    vcf struct<genome_assembly,chrom,pos,ref,alt>)
-- ``resources``   ordered list of metaData resource records
+
+``resources`` is a plain list of metaData resource records.  Each section's
+aggregate also folds the CURIE prefixes of its terms (genomic
+interpretations add ``hgnc``/``geno``); ``metaData.resources`` is the
+records whose ``id`` the subject used, in configuration order
+(~ phenopacket_builder.rs:683-702).  Unknown prefixes are dropped.
 """
 
 from __future__ import annotations
@@ -30,9 +35,9 @@ from pyspark.sql import functions as F
 from ..functions.casting import parse_datetime_multi
 from ..functions.durations import is_iso8601_duration
 from ..plans import collectors
-from ..session import local_frame
+from ..plans.collectors import curie_prefix
+from .packet import SCHEMA_VERSION, cohort_packet_id
 
-SCHEMA_VERSION = "2.0"
 # metaData.created is fixed, so a render is byte-stable across runs
 CREATED = "1970-01-01T00:00:00Z"
 _TS_FMT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
@@ -86,10 +91,6 @@ def _nonempty(col: str) -> Column:
     return F.when(F.size(F.col(col)) > 0, F.col(col))
 
 
-def _prefix_of(col: Column) -> Column:
-    return F.lower(F.split(col, ":")[0])
-
-
 def _camel(snake: str) -> str:
     head, *rest = snake.split("_")
     return head + "".join(w.capitalize() for w in rest)
@@ -107,9 +108,8 @@ def render_packets_v2(
 ) -> DataFrame:
     """Render one Phenopacket v2 JSON document per subject.
     Returns (subject_id, packet_json)."""
-    spark = labels_dim.sparkSession
     individual = collectors.collect_individual(cdfs)
-    prefix_frames: list[DataFrame] = []
+    pid = cohort_packet_id(cohort, F.col("subject_id")) if cohort else F.col("subject_id")
 
     # ---- phenotypicFeatures (cells first, then header-sourced) ------------
     cells = collectors.collect_hpo_in_cells(cdfs)
@@ -144,9 +144,9 @@ def render_packets_v2(
             F.when(F.col("excluded"), F.lit(True)).alias("excluded"),
             time_element_v2("onset").alias("onset"),
         )
-        features_sec = collectors.ordered_section(feats, item, "phenotypicFeatures")
-        prefix_frames.append(
-            feats.select("subject_id", _prefix_of(F.col("hpo_id")).alias("prefix"))
+        features_sec = collectors.ordered_section(
+            feats, item, "phenotypicFeatures",
+            prefixes=F.array(curie_prefix(F.col("hpo_id"))),
         )
 
     # ---- diseases ---------------------------------------------------------
@@ -158,9 +158,8 @@ def render_packets_v2(
             _oclass("disease_id", "_lbl").alias("term"),
             time_element_v2("onset").alias("onset"),
         )
-        diseases_sec = collectors.ordered_section(dis, item, "diseases")
-        prefix_frames.append(
-            dis.select("subject_id", _prefix_of(F.col("disease_id")).alias("prefix"))
+        diseases_sec = collectors.ordered_section(
+            dis, item, "diseases", prefixes=F.array(curie_prefix(F.col("disease_id")))
         )
 
     # ---- measurements (quantitative + qualitative, column order) ----------
@@ -198,7 +197,7 @@ def render_packets_v2(
                     ).alias("value"),
                 ).alias("item"),
                 F.array(
-                    _prefix_of(F.col("assay_id")), _prefix_of(F.col("unit"))
+                    curie_prefix(F.col("assay_id")), curie_prefix(F.col("unit"))
                 ).alias("_prefixes"),
             )
         )
@@ -224,7 +223,7 @@ def render_packets_v2(
                     ).alias("value"),
                 ).alias("item"),
                 F.array(
-                    _prefix_of(F.col("assay_id")), _prefix_of(F.col("value_id"))
+                    curie_prefix(F.col("assay_id")), curie_prefix(F.col("value_id"))
                 ).alias("_prefixes"),
             )
         )
@@ -233,9 +232,8 @@ def render_packets_v2(
         m = meas_parts[0]
         for p in meas_parts[1:]:
             m = m.unionByName(p)
-        meas_sec = collectors.ordered_section(m, F.col("item"), "measurements")
-        prefix_frames.append(
-            m.select("subject_id", F.explode("_prefixes").alias("prefix"))
+        meas_sec = collectors.ordered_section(
+            m, F.col("item"), "measurements", prefixes=F.col("_prefixes")
         )
 
     # ---- interpretations --------------------------------------------------
@@ -334,24 +332,24 @@ def render_packets_v2(
             "disease",
             F.struct(F.col("ord"), F.coalesce("_vp", F.lit(0)).alias("vp")).alias("_gord"),
             gi.alias("gi"),
+            F.array(
+                F.when(F.col("_gene").isNotNull(), F.lit("hgnc")),
+                F.when(F.col("_variant").isNotNull(), F.lit("geno")),
+            ).alias("_gp"),
         )
         per_disease = (
             gi_rows.select(
-                "subject_id", "disease",
+                "subject_id", "disease", "_gp",
                 F.struct(F.col("_gord").alias("o"), F.col("gi").alias("x")).alias("_oi"),
             )
             .groupBy("subject_id", "disease")
             .agg(
                 F.transform(F.sort_array(F.collect_list("_oi")), lambda p: p["x"]).alias("gis"),
                 F.min("_oi.o").alias("_iord"),
+                F.flatten(F.collect_set("_gp")).alias("_gp"),
             )
         )
         per_disease = _olabel(per_disease, labels_dim, "disease", "_dlbl")
-        pid = (
-            F.concat_ws("-", F.lit(cohort), F.col("subject_id"))
-            if cohort
-            else F.col("subject_id")
-        )
         interp_item = F.struct(
             F.concat_ws("-", pid, F.col("disease")).alias("id"),
             F.lit("UNKNOWN_PROGRESS").alias("progressStatus"),
@@ -361,27 +359,9 @@ def render_packets_v2(
             ).alias("diagnosis"),
         )
         interp_sec = collectors.ordered_section(
-            per_disease, interp_item, "interpretations", ord_col=F.col("_iord")
+            per_disease, interp_item, "interpretations", ord_col=F.col("_iord"),
+            prefixes=F.concat(F.array(curie_prefix(F.col("disease"))), F.col("_gp")),
         )
-        prefix_frames.append(
-            per_disease.select(
-                "subject_id", _prefix_of(F.col("disease")).alias("prefix")
-            )
-        )
-        gi_prefixes = exploded.select(
-            "subject_id",
-            F.explode(
-                F.concat(
-                    F.when(F.col("_gene").isNotNull(), F.array(F.lit("hgnc"))).otherwise(
-                        F.array().cast("array<string>")
-                    ),
-                    F.when(F.col("_variant").isNotNull(), F.array(F.lit("geno"))).otherwise(
-                        F.array().cast("array<string>")
-                    ),
-                )
-            ).alias("prefix"),
-        )
-        prefix_frames.append(gi_prefixes)
 
     # ---- medicalActions (procedures first, then treatments — broker order)
     medact_sec = None
@@ -423,9 +403,9 @@ def render_packets_v2(
                     ],
                 ).alias("item"),
                 F.array(
-                    _prefix_of(F.col("procedure_code")),
-                    _prefix_of(F.col("body_site")),
-                    *[_prefix_of(F.col(f_)) for f_ in act_fields],
+                    curie_prefix(F.col("procedure_code")),
+                    curie_prefix(F.col("body_site")),
+                    *[curie_prefix(F.col(f_)) for f_ in act_fields],
                 ).alias("_prefixes"),
             )
         )
@@ -469,10 +449,10 @@ def render_packets_v2(
                     ],
                 ).alias("item"),
                 F.array(
-                    _prefix_of(F.col("agent")),
-                    _prefix_of(F.col("route_of_administration")),
-                    _prefix_of(F.col("dose_unit")),
-                    *[_prefix_of(F.col(f_)) for f_ in act_fields],
+                    curie_prefix(F.col("agent")),
+                    curie_prefix(F.col("route_of_administration")),
+                    curie_prefix(F.col("dose_unit")),
+                    *[curie_prefix(F.col(f_)) for f_ in act_fields],
                 ).alias("_prefixes"),
             )
         )
@@ -480,60 +460,37 @@ def render_packets_v2(
         a = act_parts[0]
         for part in act_parts[1:]:
             a = a.unionByName(part)
-        medact_sec = collectors.ordered_section(a, F.col("item"), "medicalActions")
-        prefix_frames.append(
-            a.select("subject_id", F.explode("_prefixes").alias("prefix"))
-        )
-
-    # ---- metaData.resources ----------------------------------------------
-    resources_sec = None
-    if resources and prefix_frames:
-        rec_rows = [
-            (
-                i,
-                r["id"],
-                r.get("name"),
-                r.get("url"),
-                r.get("version"),
-                r.get("namespacePrefix"),
-                r.get("iriPrefix"),
-            )
-            for i, r in enumerate(resources)
-        ]
-        rdim = F.broadcast(
-            local_frame(
-                spark,
-                rec_rows,
-                "rank int, prefix string, name string, url string, version string,"
-                "namespacePrefix string, iriPrefix string",
-            )
-        )
-        pf = prefix_frames[0]
-        for p in prefix_frames[1:]:
-            pf = pf.unionByName(p)
-        pf = pf.filter(F.col("prefix").isNotNull()).distinct()
-        joined = pf.join(rdim, "prefix")  # unknown prefixes dropped
-        rec = F.struct(
-            F.col("prefix").alias("id"),
-            F.col("name"),
-            F.col("url"),
-            F.col("version"),
-            F.col("namespacePrefix"),
-            F.col("iriPrefix"),
-        )
-        resources_sec = collectors.ordered_section(
-            joined, rec, "resources", ord_col=F.col("rank")
+        medact_sec = collectors.ordered_section(
+            a, F.col("item"), "medicalActions", prefixes=F.col("_prefixes")
         )
 
     # ---- subject + assembly ----------------------------------------------
     out = individual
-    for sec in (features_sec, diseases_sec, meas_sec, interp_sec, medact_sec, resources_sec):
-        if sec is not None:
+    used: list[Column] = []
+    sections = {
+        "phenotypicFeatures": features_sec, "diseases": diseases_sec,
+        "measurements": meas_sec, "interpretations": interp_sec,
+        "medicalActions": medact_sec,
+    }
+    for name, sec in sections.items():
+        if sec is None:
+            out = out.withColumn(name, F.lit(None).cast("array<string>"))
+        else:
             out = out.join(sec, "subject_id", "left")
-    for arr in ("phenotypicFeatures", "diseases", "measurements", "interpretations",
-                "medicalActions", "resources"):
-        if arr not in out.columns:
-            out = out.withColumn(arr, F.lit(None).cast("array<string>"))
+            used.append(F.coalesce(f"_{name}_prefixes", F.array().cast("array<string>")))
+    resources_col = F.lit(None).cast("array<string>")
+    if resources and used:
+        records = F.array(*[
+            F.struct(*[
+                F.lit(r.get(k)).cast("string").alias(k)
+                for k in ("id", "name", "url", "version", "namespacePrefix", "iriPrefix")
+            ])
+            for r in resources
+        ])
+        subject_prefixes = F.concat(*used)
+        # configuration order; unknown (and null) prefixes match no record
+        kept = F.filter(records, lambda r: F.array_contains(subject_prefixes, r["id"]))
+        resources_col = F.when(F.size(kept) > 0, kept)
 
     vital = F.when(
         F.col("vital_status").isNotNull()
@@ -561,12 +518,7 @@ def render_packets_v2(
         F.lit(CREATED).alias("created"),
         F.lit(created_by).alias("createdBy"),
         F.lit(submitted_by).cast("string").alias("submittedBy"),
-        _nonempty("resources").alias("resources"),
-    )
-    pid = (
-        F.concat_ws("-", F.lit(cohort), F.col("subject_id"))
-        if cohort
-        else F.col("subject_id")
+        resources_col.alias("resources"),
     )
     packet = F.struct(
         pid.alias("id"),

@@ -714,6 +714,11 @@ def interpretation_rows(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[Dat
     return _union(rows_frames)
 
 
+def curie_prefix(col: "F.Column") -> "F.Column":
+    """The resource a CURIE cites: its lowercased prefix ('HP:0001' → 'hp')."""
+    return F.lower(F.split(col, ":")[0])
+
+
 def collect_resources(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[DataFrame]:
     """G11 (~ phenopacket_builder.rs:683-702): per subject, the distinct
     lowercase CURIE prefixes of every ontology-valued cell in the packet —
@@ -737,7 +742,7 @@ def collect_resources(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[DataF
             frames.append(
                 cdf.df.select(
                     _subject(cdf),
-                    F.lower(F.split(value, ":")[0]).alias("prefix"),
+                    curie_prefix(value).alias("prefix"),
                 ).filter(value.rlike(r"^[A-Za-z][A-Za-z0-9.]*:"))
             )
     long = _union(frames)
@@ -749,21 +754,23 @@ def collect_resources(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[DataF
 
 
 def ordered_section(long: DataFrame, item: "F.Column", alias: str,
-                    ord_col: "F.Column | None" = None) -> DataFrame:
+                    ord_col: "F.Column | None" = None,
+                    prefixes: "F.Column | None" = None) -> DataFrame:
     """Aggregate (subject, item) rows into a per-subject array in ARRIVAL
     order: sort_array over (ord, item) structs, then strip the ord — the
     distributed equivalent of the reference builder's insertion-ordered
-    section vectors."""
+    section vectors.  ``prefixes`` (a per-row array of CURIE prefixes) is
+    folded in the same aggregate into ``_{alias}_prefixes``, the section's
+    share of ``metaData.resources``."""
     o = ord_col if ord_col is not None else F.col("ord")
-    return (
-        long.select("subject_id", F.struct(o.alias("o"), item.alias("x")).alias("_oi"))
-        .groupBy("subject_id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list("_oi")), lambda p: p["x"]
-            ).alias(alias)
-        )
-    )
+    aggs = [
+        F.transform(F.sort_array(F.collect_list("_oi")), lambda p: p["x"]).alias(alias)
+    ]
+    cols = ["subject_id", F.struct(o.alias("o"), item.alias("x")).alias("_oi")]
+    if prefixes is not None:
+        cols.append(prefixes.alias("_p"))
+        aggs.append(F.flatten(F.collect_set("_p")).alias(f"_{alias}_prefixes"))
+    return long.select(*cols).groupBy("subject_id").agg(*aggs)
 
 
 def features_section(hpo_cells: Optional[DataFrame], hpo_headers: Optional[DataFrame]) -> Optional[DataFrame]:

@@ -8,7 +8,7 @@ Stage parity with the reference:
                 (~ preprocessor.rs:13-19)
 3. strategies — ordered, ``is_valid``-gated whole-table rewrites (M7),
                 then the barrier and "validate": every strict check of
-                stages 2-3, from the Pipeline's ledger, in ONE job (errors.py)
+                stages 2-3, from the Pipeline's ledger, in one action (errors.py)
 4. collect    — section builders (collectors.py), each one groupBy(subject)
 5. assemble   — nested packet struct + metadata stamp (G10), to_json
 6. load       — sharded JSONL (scale) or file-per-subject (S6 parity)

@@ -49,6 +49,8 @@ from phenoxtract_spark.sources.readers import (
 
 ASSETS = os.path.join(os.path.dirname(__file__), "assets")
 IT = os.path.join(ASSETS, "integration_test")
+# shuffle exchanges of the golden v2 render, counted as in test_plan_shapes
+GOLDEN_RENDER_MAX_EX = 10
 
 
 def sc(ident, kind, **kw):
@@ -309,7 +311,7 @@ def _run_golden(spark, dims):
 
     cdfs = pipe.preprocess(cdfs)
     cdfs = pipe.transform(cdfs)
-    out = render_packets_v2(
+    return render_packets_v2(
         cdfs,
         labels_dim=dims["labels"],
         hgnc_dim=dims["hgnc"],
@@ -319,12 +321,26 @@ def _run_golden(spark, dims):
         created_by="Integration Test",
         submitted_by="Someone",
     )
-    return {r["subject_id"]: json.loads(r["packet_json"]) for r in out.collect()}
 
 
 @pytest.fixture(scope="module")
-def golden_packets(spark, dims):
+def golden_render(spark, dims):
     return _run_golden(spark, dims)
+
+
+@pytest.fixture(scope="module")
+def golden_packets(golden_render):
+    return {r["subject_id"]: json.loads(r["packet_json"]) for r in golden_render.collect()}
+
+
+def test_golden_render_plan_builds_each_section_once(golden_render):
+    """Each v2 section is one groupBy(subject_id) that also folds its
+    resource prefixes; a second per-section prefix pipeline (union,
+    distinct, resource join, groupBy) doubled the exchanges."""
+    from test_plan_shapes import _shape
+
+    # a fresh Dataset, so the plan is the static one even after a collect
+    assert _shape(golden_render.select("*"))["ex"] <= GOLDEN_RENDER_MAX_EX
 
 
 @pytest.mark.parametrize("pid", [f"P{n:03d}" for n in range(1, 9)])

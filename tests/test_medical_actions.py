@@ -209,3 +209,79 @@ def test_v2_render_emits_camelcase_medical_actions(spark):
     # P2's procedure timestamp renders as {timestamp: ...Z}
     p2 = packets["P2"]["medicalActions"][0]["procedure"]
     assert p2["performed"] == {"timestamp": "2021-03-04T00:00:00Z"}
+
+
+def measurement_cdf(spark):
+    ctx = Context(
+        ContextKind.QUANTITATIVE_MEASUREMENT,
+        assay_id="LOINC:8302-2", unit_ontology_id="UO:0000015",
+    )
+    return ContextualizedDataFrame(
+        df=spark.createDataFrame([("P1", 180.0)], "sid string, height double"),
+        context=TableContext(name="meas", series_contexts=[
+            _sc("sid", ContextKind.SUBJECT_ID),
+            SeriesContext(identifier=Identifier.of("height"), data_context=ctx,
+                          building_block_id="m"),
+        ]),
+    )
+
+
+def _res(*ids):
+    return [{"id": i, "name": i.upper(), "url": f"http://x/{i}"} for i in ids]
+
+
+@pytest.mark.parametrize(
+    "resources, expected",
+    [
+        # uo comes from both medicalActions (dose unit) and measurements;
+        # mondo (treatment target) is not configured; hp is unused
+        (_res("uo", "hp", "ncit", "loinc", "chebi", "uberon"),
+         {"P1": ["uo", "ncit", "loinc", "chebi", "uberon"], "P2": ["ncit"]}),
+        (_res("uberon", "ncit"), {"P1": ["uberon", "ncit"], "P2": ["ncit"]}),
+        (_res("hp"), {"P1": None, "P2": None}),
+        (None, {"P1": None, "P2": None}),
+    ],
+    ids=["config-order", "unknown-dropped", "no-match", "none"],
+)
+def test_v2_render_resources_are_the_configured_prefixes_used(spark, resources, expected):
+    from phenoxtract_spark.operators.phenopacket_v2 import render_packets_v2
+
+    labels = spark.createDataFrame([], "id string, label string")
+    out = render_packets_v2(
+        [procedure_cdf(spark), treatment_cdf(spark), measurement_cdf(spark)],
+        labels_dim=labels, resources=resources,
+    )
+    for r in out.collect():
+        meta = json.loads(r["packet_json"])["metaData"]
+        want = expected[r["subject_id"]]
+        if want is None:
+            assert "resources" not in meta
+        else:
+            assert [x["id"] for x in meta["resources"]] == want
+            assert meta["resources"][0] == {
+                "id": want[0], "name": want[0].upper(), "url": f"http://x/{want[0]}"
+            }
+
+
+def test_v2_render_keeps_a_pre_prefixed_subject_id(spark):
+    # C17: '{cohort}-{subject}' unless the subject id already carries it
+    from phenoxtract_spark.operators.phenopacket_v2 import render_packets_v2
+
+    cdf = _cdf(
+        spark, [("coh-P1", "MONDO:0000001", "FBN1"), ("P2", "MONDO:0000001", "FBN1")],
+        "sid string, disease string, gene string",
+        [
+            _sc("sid", ContextKind.SUBJECT_ID),
+            _sc("disease", ContextKind.DISEASE, "d"),
+            _sc("gene", ContextKind.HGNC, "d"),
+        ],
+    )
+    labels = spark.createDataFrame([], "id string, label string")
+    out = render_packets_v2([cdf], labels_dim=labels, cohort="coh")
+    ids = {
+        p["id"]: p["interpretations"][0]["id"]
+        for p in (json.loads(r["packet_json"]) for r in out.collect())
+    }
+    assert ids == {
+        "coh-P1": "coh-P1-MONDO:0000001", "coh-P2": "coh-P2-MONDO:0000001"
+    }
