@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 from ..errors import strict_check
 
 
-#: Offending subjects/rows a failed check reports.
-_ERROR_LIMIT = 5
+#: Offending subjects/rows an eager multiplicity check reports.
+ERROR_LIMIT = 5
 
 
 class MultiplicityError(ValueError):
@@ -56,7 +56,7 @@ def single_valued(
                 f"multiple distinct values for subjects: "
                 f"{[(r['subject_id'], sorted(r['_vals'])) for r in bad]}"
             ),
-            limit=_ERROR_LIMIT,
+            limit=ERROR_LIMIT,
         )
         return agg.select("subject_id", F.element_at("_vals", 1).alias(alias))
     return agg.select(
@@ -133,12 +133,14 @@ def header_hpo_collapse(
         "_pairs",
         F.when(F.size("_obs_pairs") > 0, F.col("_obs_pairs")).otherwise(F.col("_all_pairs")),
     )
-    bad = agg.filter(F.size("_obs_pairs") > 1).limit(_ERROR_LIMIT).collect()
-    if bad:
-        raise MultiplicityError(
+    strict_check(
+        None, "conflicting_pairs", agg.filter(F.size("_obs_pairs") > 1),
+        lambda bad: MultiplicityError(
             f"conflicting observation-status pairs: "
             f"{[(r['subject_id'], r['hpo_id']) for r in bad]}"
-        )
+        ),
+        limit=ERROR_LIMIT,
+    )
     # sort before picking: when only (null-observed, onset) pairs exist and
     # several onsets disagree, collect_set order is nondeterministic — the
     # sorted first element makes the surviving pair stable across runs
@@ -160,14 +162,12 @@ def require_anchor(df: DataFrame, anchor: str, dependents: list[str]) -> DataFra
     for d in dependents:
         c = F.col(d).isNotNull()
         dep_present = c if dep_present is None else (dep_present | c)
-    bad = (
-        df.filter(F.col(anchor).isNull() & dep_present)
-        .select(anchor, *dependents)
-        .limit(_ERROR_LIMIT)
-        .collect()
-    )
-    if bad:
-        raise MultiplicityError(
+    strict_check(
+        None, f"missing_anchor:{anchor}",
+        df.filter(F.col(anchor).isNull() & dep_present).select(anchor, *dependents),
+        lambda bad: MultiplicityError(
             f"{len(bad)}+ rows have {dependents} without required anchor {anchor!r}"
-        )
+        ),
+        limit=ERROR_LIMIT,
+    )
     return df.filter(F.col(anchor).isNotNull())

@@ -1,11 +1,12 @@
 """G10/G11: nested packet assembly + JSON serialization (SURVEY §2.5).
 
 The reference folds each patient's rows into one Phenopacket protobuf via a
-mutable builder (phenopacket_builder.rs:36-61,609-702).  Spark-first: one
-wide ``groupBy(subject_id)`` with ``collect_list(struct(...))`` per section,
-then a single ``F.struct`` packet and ``F.to_json``.  One shuffle total;
-sections computed from different tables are pre-aggregated per subject and
-joined on subject_id (sort-merge or broadcast as Catalyst/AQE decides).
+mutable builder (phenopacket_builder.rs:36-61,609-702).  Spark-first: the
+collectors build each section as one ``groupBy(subject_id)`` aggregate
+(``plans/collectors.py``), and this module left-joins them onto the
+subject rows, builds a single ``F.struct`` packet and ``F.to_json``.  The
+sections also carry their terms' CURIE prefixes, so ``meta_data.resources``
+needs no aggregate of its own.
 """
 
 from __future__ import annotations
@@ -23,28 +24,32 @@ def assemble_packets(
     sections: dict[str, DataFrame],
     packet_id: Column | None = None,
     created_by: str = "phenoxtract-spark",
-    resources: DataFrame | None = None,
 ) -> DataFrame:
     """Join per-section aggregates onto the subject dimension and build the
     nested packet struct.  ``subjects`` must have a ``subject_id`` column;
-    each section DF is ``(subject_id, <alias>)``.  Missing sections → empty
-    arrays (coalesce), mirroring the reference's minimal-packet behavior
-    (big_null_test)."""
+    each section DF is ``(subject_id, <name>)``, optionally with
+    ``_<name>_prefixes`` (its terms' CURIE prefixes, see
+    ``collectors.ordered_section``).  Missing sections → empty arrays
+    (coalesce), mirroring the reference's minimal-packet behavior
+    (big_null_test).  ``meta_data.resources`` (G11, ~
+    phenopacket_builder.rs:683-702) is the sorted distinct prefixes the
+    subject's sections used, ``[]`` when none."""
     out = subjects
+    used = []
     for name, sec in sections.items():
         out = out.join(sec, "subject_id", "left")
         arr_type = sec.schema[name].dataType.simpleString()
         out = out.withColumn(name, F.coalesce(F.col(name), F.array().cast(arr_type)))
+        if f"_{name}_prefixes" in sec.columns:
+            used.append(F.coalesce(f"_{name}_prefixes", F.array().cast("array<string>")))
+    resources = F.array().cast("array<string>")
+    if used:
+        resources = F.array_sort(F.array_compact(F.array_distinct(F.concat(*used))))
     pid = packet_id if packet_id is not None else F.col("subject_id")
-    if resources is not None:
-        out = out.join(resources, "subject_id", "left")
-        res_col = F.coalesce(F.col("resources"), F.array().cast("array<string>"))
-    else:
-        res_col = F.array().cast("array<string>")
     meta = F.struct(
         F.lit(created_by).alias("created_by"),
         F.lit(SCHEMA_VERSION).alias("phenopacket_schema_version"),
-        res_col.alias("resources"),
+        resources.alias("resources"),
     )
     subject_fields = [c for c in subjects.columns]
     packet = F.struct(

@@ -10,7 +10,10 @@ Everything is DataFrame-native: label lookups are broadcast dimension
 joins, each section is ONE ``groupBy(subject_id)`` in ARRIVAL order (the
 builder's insertion-ordered vectors), the sections left-join onto the
 subject rows, and the packet is one nested ``F.struct`` → ``to_json`` with
-null/empty fields omitted — no driver-side packet building.
+null/empty fields and proto3 defaults (``excluded`` false,
+``survivalTimeInDays`` 0) omitted — no driver-side packet building.  The
+section rows and their broker order come from :mod:`..plans.collectors`,
+as for the flat packet; this module only chooses the v2 item structs.
 
 Dimensions (all broadcast, offline by design — X3-X5 pre-resolve pattern):
 - ``labels_dim``  (id, label): ontology class labels (HP/MONDO/UO/PATO/LOINC)
@@ -22,7 +25,8 @@ Dimensions (all broadcast, offline by design — X3-X5 pre-resolve pattern):
 aggregate also folds the CURIE prefixes of its terms (genomic
 interpretations add ``hgnc``/``geno``); ``metaData.resources`` is the
 records whose ``id`` the subject used, in configuration order
-(~ phenopacket_builder.rs:683-702).  Unknown prefixes are dropped.
+(~ phenopacket_builder.rs:683-702).  Unknown prefixes and terms that are
+not CURIEs are dropped.
 """
 
 from __future__ import annotations
@@ -112,31 +116,11 @@ def render_packets_v2(
     pid = cohort_packet_id(cohort, F.col("subject_id")) if cohort else F.col("subject_id")
 
     # ---- phenotypicFeatures (cells first, then header-sourced) ------------
-    cells = collectors.collect_hpo_in_cells(cdfs)
-    headers = collectors.collect_hpo_in_headers(cdfs)
-    feat_parts = []
-    if cells is not None:
-        feat_parts.append(
-            cells.select(
-                "subject_id",
-                F.col("hpo_id"),
-                F.col("excluded"),
-                F.col("onset"),
-                F.struct(F.lit(0).alias("c"), F.col("ord").alias("s")).alias("ord"),
-            )
-        )
-    if headers is not None:
-        feat_parts.append(
-            headers.filter(F.col("observed").isNotNull()).select(
-                "subject_id", "hpo_id", "excluded", "onset",
-                F.struct(F.lit(1).alias("c"), F.col("ord").alias("s")).alias("ord"),
-            )
-        )
+    feats = collectors.feature_rows(
+        collectors.collect_hpo_in_cells(cdfs), collectors.collect_hpo_in_headers(cdfs)
+    )
     features_sec = None
-    if feat_parts:
-        feats = feat_parts[0]
-        for p in feat_parts[1:]:
-            feats = feats.unionByName(p)
+    if feats is not None:
         feats = _olabel(feats, labels_dim, "hpo_id", "_lbl")
         item = F.struct(
             _oclass("hpo_id", "_lbl").alias("type"),
@@ -365,103 +349,43 @@ def render_packets_v2(
 
     # ---- medicalActions (procedures first, then treatments — broker order)
     medact_sec = None
-    procs = collectors.collect_medical_procedures(cdfs)
-    treats = collectors.collect_medical_treatments(cdfs)
-    act_fields = [
-        "treatment_target", "treatment_intent",
-        "response_to_treatment", "treatment_termination_reason",
-    ]
-    act_parts = []
-    if procs is not None:
-        p = _olabel(procs, labels_dim, "procedure_code", "_plbl")
-        p = _olabel(p, labels_dim, "body_site", "_blbl")
-        for f_ in act_fields:
-            p = _olabel(p, labels_dim, f_, f"_{f_}_lbl")
-        act_parts.append(
-            p.select(
-                "subject_id",
-                F.struct(F.lit(0).alias("c"), F.col("ord").alias("s")).alias("ord"),
-                F.struct(
-                    F.struct(
-                        _oclass("procedure_code", "_plbl").alias("code"),
-                        F.when(
-                            F.col("body_site").isNotNull(), _oclass("body_site", "_blbl")
-                        ).alias("bodySite"),
-                        time_element_v2("performed").alias("performed"),
-                    ).alias("procedure"),
-                    F.lit(None).cast(
-                        "struct<agent:struct<id:string,label:string>,"
-                        "routeOfAdministration:struct<id:string,label:string>,"
-                        "drugType:string,"
-                        "cumulativeDose:struct<unit:struct<id:string,label:string>,value:double>>"
-                    ).alias("treatment"),
-                    *[
-                        F.when(
-                            F.col(f_).isNotNull(), _oclass(f_, f"_{f_}_lbl")
-                        ).alias(_camel(f_))
-                        for f_ in act_fields
-                    ],
-                ).alias("item"),
-                F.array(
-                    curie_prefix(F.col("procedure_code")),
-                    curie_prefix(F.col("body_site")),
-                    *[curie_prefix(F.col(f_)) for f_ in act_fields],
-                ).alias("_prefixes"),
-            )
-        )
-    if treats is not None:
-        t = _olabel(treats, labels_dim, "agent", "_aglbl")
-        t = _olabel(t, labels_dim, "route_of_administration", "_rlbl")
-        t = _olabel(t, labels_dim, "dose_unit", "_dulbl")
-        for f_ in act_fields:
-            t = _olabel(t, labels_dim, f_, f"_{f_}_lbl")
+    acts = collectors.medical_action_rows(
+        collectors.collect_medical_procedures(cdfs), collectors.collect_medical_treatments(cdfs)
+    )
+    if acts is not None:
+        coded = ("procedure_code", "body_site", "agent", "route_of_administration",
+                 "dose_unit", *collectors.MEDICAL_ACTION_FIELDS)
+        for c in coded:
+            acts = _olabel(acts, labels_dim, c, f"_{c}_lbl")
+
+        def oclass(c: str) -> Column:
+            return F.when(F.col(c).isNotNull(), _oclass(c, f"_{c}_lbl"))
+
+        is_procedure = F.col("ord.c") == 0
         dose = F.when(
             F.col("dose_value").isNotNull() & F.col("dose_unit").isNotNull(),
             F.struct(
-                _oclass("dose_unit", "_dulbl").alias("unit"),
+                _oclass("dose_unit", "_dose_unit_lbl").alias("unit"),
                 F.col("dose_value").alias("value"),
             ),
         )
-        act_parts.append(
-            t.select(
-                "subject_id",
-                F.struct(F.lit(1).alias("c"), F.col("ord").alias("s")).alias("ord"),
-                F.struct(
-                    F.lit(None).cast(
-                        "struct<code:struct<id:string,label:string>,"
-                        "bodySite:struct<id:string,label:string>,"
-                        "performed:struct<age:struct<iso8601duration:string>,timestamp:string>>"
-                    ).alias("procedure"),
-                    F.struct(
-                        _oclass("agent", "_aglbl").alias("agent"),
-                        F.when(
-                            F.col("route_of_administration").isNotNull(),
-                            _oclass("route_of_administration", "_rlbl"),
-                        ).alias("routeOfAdministration"),
-                        F.col("drug_type").alias("drugType"),
-                        dose.alias("cumulativeDose"),
-                    ).alias("treatment"),
-                    *[
-                        F.when(
-                            F.col(f_).isNotNull(), _oclass(f_, f"_{f_}_lbl")
-                        ).alias(_camel(f_))
-                        for f_ in act_fields
-                    ],
-                ).alias("item"),
-                F.array(
-                    curie_prefix(F.col("agent")),
-                    curie_prefix(F.col("route_of_administration")),
-                    curie_prefix(F.col("dose_unit")),
-                    *[curie_prefix(F.col(f_)) for f_ in act_fields],
-                ).alias("_prefixes"),
-            )
+        item = F.struct(
+            F.when(is_procedure, F.struct(
+                _oclass("procedure_code", "_procedure_code_lbl").alias("code"),
+                oclass("body_site").alias("bodySite"),
+                time_element_v2("performed").alias("performed"),
+            )).alias("procedure"),
+            F.when(~is_procedure, F.struct(
+                _oclass("agent", "_agent_lbl").alias("agent"),
+                oclass("route_of_administration").alias("routeOfAdministration"),
+                F.col("drug_type").alias("drugType"),
+                dose.alias("cumulativeDose"),
+            )).alias("treatment"),
+            *[oclass(f_).alias(_camel(f_)) for f_ in collectors.MEDICAL_ACTION_FIELDS],
         )
-    if act_parts:
-        a = act_parts[0]
-        for part in act_parts[1:]:
-            a = a.unionByName(part)
         medact_sec = collectors.ordered_section(
-            a, F.col("item"), "medicalActions", prefixes=F.col("_prefixes")
+            acts, item, "medicalActions",
+            prefixes=F.array(*[curie_prefix(F.col(c)) for c in coded]),
         )
 
     # ---- subject + assembly ----------------------------------------------
@@ -492,6 +416,7 @@ def render_packets_v2(
         kept = F.filter(records, lambda r: F.array_contains(subject_prefixes, r["id"]))
         resources_col = F.when(F.size(kept) > 0, kept)
 
+    days = F.col("survival_time_days").cast("double").cast("long")
     vital = F.when(
         F.col("vital_status").isNotNull()
         | F.col("time_of_death").isNotNull()
@@ -499,10 +424,8 @@ def render_packets_v2(
         F.struct(
             F.col("vital_status").alias("status"),
             time_element_v2("time_of_death").alias("timeOfDeath"),
-            F.col("survival_time_days")
-            .cast("double")
-            .cast("long")
-            .alias("survivalTimeInDays"),
+            # proto3 default: 0 is omitted
+            F.when(days != 0, days).alias("survivalTimeInDays"),
         ),
     )
     subject = F.struct(

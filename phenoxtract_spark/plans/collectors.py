@@ -8,6 +8,13 @@ projections unioned across tables, then ONE ``groupBy(subject_id)`` each;
 the final assembly left-joins sections onto the subject dimension.  Arrival
 order (builder upsert semantics) is made explicit with a ``seq`` column
 (table_rank, row order) resolved by window ``last`` (SURVEY §7.3).
+
+Both packet renderers build on the same long frames: the flat sections
+here (``Pipeline.collect``) and ``render_packets_v2`` differ only in the
+item struct.  The broker order between two collectors (cells before
+headers, procedures before treatments) lives in :func:`feature_rows` and
+:func:`medical_action_rows`.  A section's aggregate also folds its terms'
+CURIE prefixes (:func:`curie_prefix`), the packet's resources.
 """
 
 from __future__ import annotations
@@ -55,9 +62,6 @@ def _linked_col(cdf: ContextualizedDataFrame, block: Optional[str], kind: Contex
         )
     return hits[0] if hits else None
 
-
-# offender rows an eager multiplicity check collects into its error
-_ERROR_LIMIT = 5
 
 INDIVIDUAL_FIELDS = {
     "sex": ContextKind.SUBJECT_SEX,
@@ -108,17 +112,21 @@ def collect_individual(cdfs: Sequence[ContextualizedDataFrame]) -> DataFrame:
     for name in INDIVIDUAL_FIELDS:
         c = F.size(f"_s_{name}") > 1
         conflict = c if conflict is None else (conflict | c)
-    bad = agg.filter(conflict).select(
-        "subject_id", *[f"_s_{n}" for n in INDIVIDUAL_FIELDS]
-    ).limit(_ERROR_LIMIT).collect()
-    if bad:
+
+    def conflict_error(bad):
         detail = [
             (r["subject_id"], {n: sorted(r[f"_s_{n}"]) for n in INDIVIDUAL_FIELDS if len(r[f"_s_{n}"]) > 1})
             for r in bad
         ]
-        raise grouping.MultiplicityError(
+        return grouping.MultiplicityError(
             f"multiple distinct values for individual fields: {detail}"
         )
+
+    strict_check(
+        None, "multiple_values:individual",
+        agg.filter(conflict).select("subject_id", *[f"_s_{n}" for n in INDIVIDUAL_FIELDS]),
+        conflict_error, limit=grouping.ERROR_LIMIT,
+    )
     return agg.select(
         "subject_id",
         *[
@@ -381,25 +389,18 @@ DRUG_TYPES = {
     "ADMINISTRATION_RELATED_TO_PROCEDURE",
 }
 
-_MEDICAL_ACTION_KINDS = (
-    ContextKind.TREATMENT_TARGET,
-    ContextKind.TREATMENT_INTENT,
-    ContextKind.RESPONSE_TO_TREATMENT,
-    ContextKind.TREATMENT_TERMINATION_REASON,
-)
+#: MedicalActionData (~ medical_action.rs:21-52): the four optional
+#: action-level columns linked into a procedure's or an agent's block.
+MEDICAL_ACTION_FIELDS = {
+    "treatment_target": ContextKind.TREATMENT_TARGET,
+    "treatment_intent": ContextKind.TREATMENT_INTENT,
+    "response_to_treatment": ContextKind.RESPONSE_TO_TREATMENT,
+    "treatment_termination_reason": ContextKind.TREATMENT_TERMINATION_REASON,
+}
 
 
 def _medical_action_cols(cdf: ContextualizedDataFrame, block: Optional[str]):
-    """MedicalActionData (~ medical_action.rs:21-52): the four optional
-    action-level columns linked into the same building block."""
-    return {
-        "treatment_target": _linked_col(cdf, block, ContextKind.TREATMENT_TARGET),
-        "treatment_intent": _linked_col(cdf, block, ContextKind.TREATMENT_INTENT),
-        "response_to_treatment": _linked_col(cdf, block, ContextKind.RESPONSE_TO_TREATMENT),
-        "treatment_termination_reason": _linked_col(
-            cdf, block, ContextKind.TREATMENT_TERMINATION_REASON
-        ),
-    }
+    return {k: _linked_col(cdf, block, kind) for k, kind in MEDICAL_ACTION_FIELDS.items()}
 
 
 def collect_medical_procedures(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[DataFrame]:
@@ -570,72 +571,72 @@ def collect_medical_treatments(
                 "treatment values without an agent for subjects: "
                 f"{sorted({r['offender'] for r in rows})}"
             ),
-            limit=_ERROR_LIMIT,
+            limit=grouping.ERROR_LIMIT,
         )
     return _union(frames)
+
+
+def _broker_rows(halves, cols: dict[str, str]) -> Optional[DataFrame]:
+    """Union two collectors' long frames in broker order
+    (cdf_collector_broker.rs:77-91): ``halves`` is ``((rows, own columns),
+    (rows, own columns))``, ``cols`` every column with its type.  A half
+    fills the columns it lacks with nulls, and ``ord`` becomes
+    ``struct(c, s)``: ``c`` is the half (0 first), ``s`` its arrival order."""
+    parts = [
+        rows.select(
+            "subject_id",
+            *[(F.col(k) if k in own else F.lit(None).cast(t)).alias(k) for k, t in cols.items()],
+            F.struct(F.lit(c).alias("c"), F.col("ord").alias("s")).alias("ord"),
+        )
+        for c, (rows, own) in enumerate(halves)
+        if rows is not None
+    ]
+    return _union(parts)
+
+
+_PROCEDURE_COLS = {"procedure_code": "string", "body_site": "string", "performed": "string"}
+_TREATMENT_COLS = {
+    "agent": "string", "route_of_administration": "string", "drug_type": "string",
+    "dose_value": "double", "dose_unit": "string", "ref_low": "double", "ref_high": "double",
+}
+
+
+def medical_action_rows(
+    procedures: Optional[DataFrame], treatments: Optional[DataFrame]
+) -> Optional[DataFrame]:
+    """Procedure and treatment rows as one long frame: MedicalProcedureCollector
+    runs before MedicalTreatmentCollector, so all procedures (``ord.c`` 0)
+    precede all treatments (``ord.c`` 1); within each, arrival order.  A row
+    carries the other half's columns as nulls."""
+    act = dict.fromkeys(MEDICAL_ACTION_FIELDS, "string")
+    return _broker_rows(
+        ((procedures, [*_PROCEDURE_COLS, *act]), (treatments, [*_TREATMENT_COLS, *act])),
+        {**_PROCEDURE_COLS, **_TREATMENT_COLS, **act},
+    )
 
 
 def medical_actions_section(
     procedures: Optional[DataFrame], treatments: Optional[DataFrame]
 ) -> Optional[DataFrame]:
     """Merge procedure and treatment rows into one ``medical_actions`` array
-    per subject.  Broker order (cdf_collector_broker.rs:77-91) runs
-    MedicalProcedureCollector before MedicalTreatmentCollector, so all
-    procedures precede all treatments; within each, arrival order."""
-    parts = []
-    if procedures is not None:
-        parts.append(
-            procedures.select(
-                "subject_id",
-                F.struct(F.lit(0).alias("c"), F.col("ord").alias("s")).alias("ord"),
-                F.struct(
-                    F.struct(
-                        F.col("procedure_code").alias("code"),
-                        F.col("body_site"),
-                        time_element_expr("performed").alias("performed"),
-                    ).alias("procedure"),
-                    F.lit(None).cast(
-                        "struct<agent:string,route_of_administration:string,"
-                        "drug_type:string,dose_value:double,dose_unit:string,"
-                        "ref_low:double,ref_high:double>"
-                    ).alias("treatment"),
-                    F.col("treatment_target"),
-                    F.col("treatment_intent"),
-                    F.col("response_to_treatment"),
-                    F.col("treatment_termination_reason"),
-                ).alias("action"),
-            )
-        )
-    if treatments is not None:
-        parts.append(
-            treatments.select(
-                "subject_id",
-                F.struct(F.lit(1).alias("c"), F.col("ord").alias("s")).alias("ord"),
-                F.struct(
-                    F.lit(None).cast(
-                        "struct<code:string,body_site:string,"
-                        "performed:struct<age:struct<iso8601duration:string>,timestamp:timestamp>>"
-                    ).alias("procedure"),
-                    F.struct(
-                        F.col("agent"),
-                        F.col("route_of_administration"),
-                        F.col("drug_type"),
-                        F.col("dose_value"),
-                        F.col("dose_unit"),
-                        F.col("ref_low"),
-                        F.col("ref_high"),
-                    ).alias("treatment"),
-                    F.col("treatment_target"),
-                    F.col("treatment_intent"),
-                    F.col("response_to_treatment"),
-                    F.col("treatment_termination_reason"),
-                ).alias("action"),
-            )
-        )
-    long = _union(parts)
+    per subject, in :func:`medical_action_rows` order."""
+    long = medical_action_rows(procedures, treatments)
     if long is None:
         return None
-    return ordered_section(long, F.col("action"), "medical_actions")
+    is_procedure = F.col("ord.c") == 0
+    return ordered_section(
+        long,
+        F.struct(
+            F.when(is_procedure, F.struct(
+                F.col("procedure_code").alias("code"),
+                F.col("body_site"),
+                time_element_expr("performed").alias("performed"),
+            )).alias("procedure"),
+            F.when(~is_procedure, F.struct(*_TREATMENT_COLS)).alias("treatment"),
+            *MEDICAL_ACTION_FIELDS,
+        ),
+        "medical_actions",
+    )
 
 
 def collect_interpretations(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[DataFrame]:
@@ -715,42 +716,9 @@ def interpretation_rows(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[Dat
 
 
 def curie_prefix(col: "F.Column") -> "F.Column":
-    """The resource a CURIE cites: its lowercased prefix ('HP:0001' → 'hp')."""
-    return F.lower(F.split(col, ":")[0])
-
-
-def collect_resources(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[DataFrame]:
-    """G11 (~ phenopacket_builder.rs:683-702): per subject, the distinct
-    lowercase CURIE prefixes of every ontology-valued cell in the packet —
-    the meta_data.resources list."""
-    CURIE_KINDS = (ContextKind.HPO, ContextKind.DISEASE)
-    frames = []
-    for cdf in cdfs:
-        for col, sc in cdf.resolved().items():
-            take = sc.data_context.kind in CURIE_KINDS or (
-                sc.header_context is not None
-                and sc.header_context.kind == ContextKind.HPO
-            )
-            if not take:
-                continue
-            value = (
-                F.lit(col)  # header-HPO: the CURIE is the column NAME
-                if sc.header_context is not None
-                and sc.header_context.kind == ContextKind.HPO
-                else F.col(col).cast("string")
-            )
-            frames.append(
-                cdf.df.select(
-                    _subject(cdf),
-                    curie_prefix(value).alias("prefix"),
-                ).filter(value.rlike(r"^[A-Za-z][A-Za-z0-9.]*:"))
-            )
-    long = _union(frames)
-    if long is None:
-        return None
-    return long.groupBy("subject_id").agg(
-        F.sort_array(F.collect_set("prefix")).alias("resources")
-    )
+    """The resource a CURIE cites: its lowercased prefix ('HP:0001' → 'hp');
+    null when the value is not a CURIE."""
+    return F.when(col.rlike(r"^[A-Za-z][A-Za-z0-9.]*:"), F.lower(F.split(col, ":")[0]))
 
 
 def ordered_section(long: DataFrame, item: "F.Column", alias: str,
@@ -773,46 +741,39 @@ def ordered_section(long: DataFrame, item: "F.Column", alias: str,
     return long.select(*cols).groupBy("subject_id").agg(*aggs)
 
 
-def features_section(hpo_cells: Optional[DataFrame], hpo_headers: Optional[DataFrame]) -> Optional[DataFrame]:
-    """Merge cell-sourced and header-sourced features into one
-    ``phenotypic_features`` array per subject (G10 section), in arrival
-    order: all cell-sourced features first (the reference's HpoInCells
-    collector runs before HpoInHeader), each in (table+column, row) order."""
-    parts = []
-    if hpo_cells is not None:
-        parts.append(
-            hpo_cells.select(
-                "subject_id",
-                F.struct(F.lit(0).alias("c"), F.col("ord").alias("s")).alias("ord"),
-                F.struct(
-                    F.col("hpo_id").alias("type_id"),
-                    F.col("excluded"),
-                    time_element_expr("onset").alias("onset"),
-                    time_element_expr("resolution").alias("resolution"),
-                    F.col("severity"),
-                ).alias("feature"),
-            )
-        )
+def feature_rows(hpo_cells: Optional[DataFrame], hpo_headers: Optional[DataFrame]) -> Optional[DataFrame]:
+    """Cell-sourced and observed header-sourced features as one long frame:
+    the reference's HpoInCells collector runs before HpoInHeader, so every
+    cell feature (``ord.c`` 0) precedes every header feature (``ord.c`` 1),
+    each in (table+column, row) order.  Header rows carry null
+    ``resolution`` and ``severity``."""
+    cols = {"hpo_id": "string", "excluded": "boolean", "onset": "string",
+            "resolution": "string", "severity": "string"}
     if hpo_headers is not None:
-        parts.append(
-            hpo_headers.filter(F.col("observed").isNotNull()).select(
-                "subject_id",
-                F.struct(F.lit(1).alias("c"), F.col("ord").alias("s")).alias("ord"),
-                F.struct(
-                    F.col("hpo_id").alias("type_id"),
-                    F.col("excluded"),
-                    time_element_expr("onset").alias("onset"),
-                    F.lit(None).cast(
-                        "struct<age:struct<iso8601duration:string>,timestamp:timestamp>"
-                    ).alias("resolution"),
-                    F.lit(None).cast("string").alias("severity"),
-                ).alias("feature"),
-            )
-        )
-    long = _union(parts)
+        hpo_headers = hpo_headers.filter(F.col("observed").isNotNull())
+    return _broker_rows(
+        ((hpo_cells, cols), (hpo_headers, ["hpo_id", "excluded", "onset"])), cols
+    )
+
+
+def features_section(hpo_cells: Optional[DataFrame], hpo_headers: Optional[DataFrame]) -> Optional[DataFrame]:
+    """One ``phenotypic_features`` array per subject (G10 section), in
+    :func:`feature_rows` order, with the features' CURIE prefixes."""
+    long = feature_rows(hpo_cells, hpo_headers)
     if long is None:
         return None
-    return ordered_section(long, F.col("feature"), "phenotypic_features")
+    return ordered_section(
+        long,
+        F.struct(
+            F.col("hpo_id").alias("type_id"),
+            F.col("excluded"),
+            time_element_expr("onset").alias("onset"),
+            time_element_expr("resolution").alias("resolution"),
+            F.col("severity"),
+        ),
+        "phenotypic_features",
+        prefixes=F.array(curie_prefix(F.col("hpo_id"))),
+    )
 
 
 def diseases_section(diseases: Optional[DataFrame]) -> Optional[DataFrame]:
@@ -826,6 +787,7 @@ def diseases_section(diseases: Optional[DataFrame]) -> Optional[DataFrame]:
             F.col("primary_site"),
         ),
         "diseases",
+        prefixes=F.array(curie_prefix(F.col("disease_id"))),
     )
 
 

@@ -137,7 +137,6 @@ class Pipeline:
             sections,
             packet_id=pid,
             created_by=self.created_by,
-            resources=collectors.collect_resources(cdfs),
         )
 
     def run(self, cdfs: Sequence[ContextualizedDataFrame]) -> DataFrame:

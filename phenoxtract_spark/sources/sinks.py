@@ -27,21 +27,9 @@ def write_jsonl(packets: DataFrame, path: str, num_shards: int | None = None) ->
 
 def write_file_per_subject(packets: DataFrame, out_dir: str) -> None:
     """S6 faithful mode: one ``{subject_id}.json`` per ``(subject_id,
-    packet_json)`` row, pretty-printed; drops default-zero
-    ``survivalTimeInDays`` (~ file_system_loader.rs:31-98).
+    packet_json)`` row, pretty-printed (~ file_system_loader.rs:68-98).
     Executor-side ``foreachPartition`` — no driver collect."""
     os.makedirs(out_dir, exist_ok=True)
-
-    def _strip_default(obj):
-        if isinstance(obj, dict):
-            return {
-                k: _strip_default(v)
-                for k, v in obj.items()
-                if not (k == "survivalTimeInDays" and v == 0)
-            }
-        if isinstance(obj, list):
-            return [_strip_default(v) for v in obj]
-        return obj
 
     def _safe_basename(sid) -> str:
         # subject ids are arbitrary strings from data: percent-encode each
@@ -53,7 +41,7 @@ def write_file_per_subject(packets: DataFrame, out_dir: str) -> None:
 
     def write_part(rows):
         for row in rows:
-            obj = _strip_default(json.loads(row["packet_json"]))
+            obj = json.loads(row["packet_json"])
             fname = os.path.join(out_dir, f"{_safe_basename(row['subject_id'])}.json")
             with open(fname, "w") as f:
                 json.dump(obj, f, indent=2, sort_keys=False)

@@ -31,6 +31,10 @@ from phenoxtract_spark.plans.strategies import (
     OntologyNormaliserStrategy,
 )
 
+# shuffle exchanges of the full-cohort flat packets, counted as in
+# test_plan_shapes
+FULL_COHORT_MAX_EX = 9
+
 
 def sc(ident, kind, **kw):
     ctx_kw = {k: kw.pop(k) for k in ("time_type", "boundary", "assay_id", "unit_ontology_id") if k in kw}
@@ -128,10 +132,9 @@ def cohort(spark):
     ]
 
 
-def test_full_cohort_packets(spark, cohort):
+def _full_pipeline(spark) -> Pipeline:
     hpo_dim = ontology.bidict_dim(spark, ontology.MINI_HPO).select("key", "id")
     mondo_dim = ontology.bidict_dim(spark, ontology.MINI_MONDO).select("key", "id")
-    ledger = ErrorLedger()
     pipe = Pipeline(cohort="COH")
     pipe.add_strategy(AliasMapStrategy())
     pipe.add_strategy(MappingStrategy(spark, ContextKind.SUBJECT_SEX, mapping.SEX_MAP))
@@ -139,7 +142,11 @@ def test_full_cohort_packets(spark, cohort):
     pipe.add_strategy(OntologyNormaliserStrategy(ontology_dim=hpo_dim, kinds=(ContextKind.HPO,)))
     pipe.add_strategy(OntologyNormaliserStrategy(ontology_dim=mondo_dim, kinds=(ContextKind.DISEASE,)))
     pipe.add_strategy(DateToAgeStrategy())
+    return pipe
 
+
+def test_full_cohort_packets(spark, cohort):
+    pipe = _full_pipeline(spark)
     out = {r["subject_id"]: json.loads(r["packet_json"]) for r in pipe.run(cohort).collect()}
     assert set(out) == {"P001", "P002"}
 
@@ -198,3 +205,29 @@ def test_full_cohort_ledger_catches_bad_rows(spark, cohort):
     with pytest.raises(PipelineValidationError) as e:
         pipe.run([bad_cdf])
     assert "unknown phenotype xyz" in str(e.value)
+
+
+def test_full_cohort_plan_folds_resources_into_the_sections(spark, cohort):
+    """meta_data.resources comes from the feature and disease aggregates;
+    a separate prefix pipeline (union, groupBy, join) cost an exchange."""
+    from test_plan_shapes import _shape
+
+    js = _full_pipeline(spark).run(cohort)
+    assert _shape(js.select("*"))["ex"] <= FULL_COHORT_MAX_EX
+
+
+def test_header_hpo_resources_count_only_observed_cells(spark, cohort):
+    # G11: a header-HPO term is in a packet only where the subject's cell
+    # holds an observation, so an all-null row cites no resource
+    obs = spark.createDataFrame(
+        [("P001", True, None), ("P003", None, None)],
+        "pid string, `HP:0000246` boolean, onset_date string",
+    )
+    cdf = ContextualizedDataFrame(obs, cohort[2].context)
+    out = {
+        r["subject_id"]: json.loads(r["packet_json"])
+        for r in Pipeline().run([cdf]).collect()
+    }
+    assert out["P001"]["meta_data"]["resources"] == ["hp"]
+    assert out["P003"]["phenotypic_features"] == []
+    assert out["P003"]["meta_data"]["resources"] == []

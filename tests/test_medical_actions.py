@@ -183,6 +183,42 @@ def test_section_orders_procedures_before_treatments(spark):
     assert acts[1]["treatment"]["agent"] == "CHEBI:6801"
 
 
+@pytest.mark.parametrize("kept, other", [("procedure", "treatment"), ("treatment", "procedure")])
+def test_section_with_one_kind_of_action(spark, kept, other):
+    # the missing half's columns are null-filled, its struct stays null
+    sec = collectors.medical_actions_section(
+        collectors.collect_medical_procedures([procedure_cdf(spark)]) if kept == "procedure" else None,
+        collectors.collect_medical_treatments([treatment_cdf(spark)]) if kept == "treatment" else None,
+    )
+    acts = {r["subject_id"]: r["medical_actions"] for r in sec.collect()}["P1"]
+    assert acts and all(a[kept] is not None and a[other] is None for a in acts)
+
+
+def test_v2_render_omits_a_zero_survival_time(spark):
+    # proto3 default: survivalTimeInDays 0 is left out of the packet itself,
+    # so every sink writes the same document
+    from phenoxtract_spark.operators.phenopacket_v2 import render_packets_v2
+
+    cdf = _cdf(
+        spark, [("P1", "DECEASED", 0), ("P2", "DECEASED", 12)],
+        "sid string, vital string, days int",
+        [
+            _sc("sid", ContextKind.SUBJECT_ID),
+            _sc("vital", ContextKind.VITAL_STATUS),
+            _sc("days", ContextKind.SURVIVAL_TIME_DAYS),
+        ],
+    )
+    labels = spark.createDataFrame([], "id string, label string")
+    out = {
+        r["subject_id"]: json.loads(r["packet_json"])["subject"]["vitalStatus"]
+        for r in render_packets_v2([cdf], labels_dim=labels).collect()
+    }
+    assert out == {
+        "P1": {"status": "DECEASED"},
+        "P2": {"status": "DECEASED", "survivalTimeInDays": 12},
+    }
+
+
 def test_v2_render_emits_camelcase_medical_actions(spark):
     from phenoxtract_spark.operators.phenopacket_v2 import render_packets_v2
 
