@@ -1,4 +1,4 @@
-"""Grouping / per-subject collection operators (SURVEY §2.5 G1-G7, G12).
+"""Grouping / per-subject collection operators (SURVEY §2.5 G1-G7).
 
 The reference materializes one sub-frame per patient
 (cdf_collector_broker.rs:32-74) — memory-quadratic at scale.  Spark-first:
@@ -153,21 +153,3 @@ def header_hpo_collapse(
         pair["onset"].alias("onset"),
     )
 
-
-def require_anchor(df: DataFrame, anchor: str, dependents: list[str]) -> DataFrame:
-    """G12 (~ medical_actions/quantity_data.rs:93-146): dependent fields
-    present without the anchor → error; rows with null anchor and null
-    dependents are silently skipped."""
-    dep_present = None
-    for d in dependents:
-        c = F.col(d).isNotNull()
-        dep_present = c if dep_present is None else (dep_present | c)
-    strict_check(
-        None, f"missing_anchor:{anchor}",
-        df.filter(F.col(anchor).isNull() & dep_present).select(anchor, *dependents),
-        lambda bad: MultiplicityError(
-            f"{len(bad)}+ rows have {dependents} without required anchor {anchor!r}"
-        ),
-        limit=ERROR_LIMIT,
-    )
-    return df.filter(F.col(anchor).isNotNull())

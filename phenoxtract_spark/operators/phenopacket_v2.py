@@ -36,6 +36,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..descriptors import ContextKind
 from ..functions.casting import parse_datetime_multi
 from ..functions.durations import is_iso8601_duration
 from ..plans import collectors
@@ -147,13 +148,15 @@ def render_packets_v2(
         )
 
     # ---- measurements (quantitative + qualitative, column order) ----------
-    quant = collectors.collect_quantitative_measurements(cdfs)
-    qual = collectors.collect_qualitative_measurements(cdfs)
-    meas_parts = []
-    if quant is not None:
-        q = _olabel(quant, labels_dim, "assay_id", "_albl")
-        q = _olabel(q, labels_dim, "unit", "_ulbl")
-        unit_cls = _oclass("unit", "_ulbl")
+    meas = collectors.measurement_rows(
+        cdfs, {ContextKind.QUANTITATIVE_MEASUREMENT, ContextKind.QUALITATIVE_MEASUREMENT}
+    )
+    meas_sec = None
+    if meas is not None:
+        coded = ("assay_id", "unit", "value_id")
+        for c in coded:
+            meas = _olabel(meas, labels_dim, c, f"_{c}_lbl")
+        unit_cls = _oclass("unit", "_unit_lbl")
         ref = F.when(
             F.col("ref_low").isNotNull() | F.col("ref_high").isNotNull(),
             F.struct(
@@ -162,62 +165,22 @@ def render_packets_v2(
                 F.col("ref_high").alias("high"),
             ),
         )
-        meas_parts.append(
-            q.select(
-                "subject_id",
-                "ord",
-                F.struct(
-                    _oclass("assay_id", "_albl").alias("assay"),
-                    time_element_v2("time_observed").alias("timeObserved"),
-                    F.struct(
-                        F.struct(
-                            unit_cls.alias("unit"),
-                            F.col("value").alias("value"),
-                            ref.alias("referenceRange"),
-                        ).alias("quantity"),
-                        F.lit(None)
-                        .cast("struct<id:string,label:string>")
-                        .alias("ontologyClass"),
-                    ).alias("value"),
-                ).alias("item"),
-                F.array(
-                    curie_prefix(F.col("assay_id")), curie_prefix(F.col("unit"))
-                ).alias("_prefixes"),
-            )
+        is_quantity = F.col("value_id").isNull()
+        item = F.struct(
+            _oclass("assay_id", "_assay_id_lbl").alias("assay"),
+            time_element_v2("time_observed").alias("timeObserved"),
+            F.struct(
+                F.when(is_quantity, F.struct(
+                    unit_cls.alias("unit"),
+                    F.col("value").alias("value"),
+                    ref.alias("referenceRange"),
+                )).alias("quantity"),
+                F.when(~is_quantity, _oclass("value_id", "_value_id_lbl")).alias("ontologyClass"),
+            ).alias("value"),
         )
-    if qual is not None:
-        ql = _olabel(qual, labels_dim, "assay_id", "_albl")
-        ql = _olabel(ql, labels_dim, "value_id", "_vlbl")
-        meas_parts.append(
-            ql.select(
-                "subject_id",
-                "ord",
-                F.struct(
-                    _oclass("assay_id", "_albl").alias("assay"),
-                    time_element_v2("time_observed").alias("timeObserved"),
-                    F.struct(
-                        F.lit(None)
-                        .cast(
-                            "struct<unit:struct<id:string,label:string>,value:double,"
-                            "referenceRange:struct<unit:struct<id:string,label:string>,"
-                            "low:double,high:double>>"
-                        )
-                        .alias("quantity"),
-                        _oclass("value_id", "_vlbl").alias("ontologyClass"),
-                    ).alias("value"),
-                ).alias("item"),
-                F.array(
-                    curie_prefix(F.col("assay_id")), curie_prefix(F.col("value_id"))
-                ).alias("_prefixes"),
-            )
-        )
-    meas_sec = None
-    if meas_parts:
-        m = meas_parts[0]
-        for p in meas_parts[1:]:
-            m = m.unionByName(p)
         meas_sec = collectors.ordered_section(
-            m, F.col("item"), "measurements", prefixes=F.col("_prefixes")
+            meas, item, "measurements",
+            prefixes=F.array(*[curie_prefix(F.col(c)) for c in coded]),
         )
 
     # ---- interpretations --------------------------------------------------

@@ -5,9 +5,15 @@ The reference materializes per-patient frames and runs 9 collectors in a
 loop (cdf_collector_broker.rs:32-91).  Spark-first: every collector is a
 *section builder* producing ``(subject_id, <section array>)`` via narrow
 projections unioned across tables, then ONE ``groupBy(subject_id)`` each;
-the final assembly left-joins sections onto the subject dimension.  Arrival
-order (builder upsert semantics) is made explicit with a ``seq`` column
-(table_rank, row order) resolved by window ``last`` (SURVEY §7.3).
+the final assembly left-joins sections onto the subject dimension.
+
+The column-anchored collectors (HPO cells, diseases, measurements,
+procedures, treatments) share one row builder, :func:`_anchor_rows`: each
+anchor column's non-null rows zipped with its block's linked columns, plus
+the arrival order ``ord = struct(frame index, row order)`` that makes the
+builder's upsert semantics explicit (SURVEY §7.3).  Both measurement kinds
+are one frame (:func:`measurement_rows`), so one frame index keeps the
+reference's (table, column) order across kinds.
 
 Both packet renderers build on the same long frames: the flat sections
 here (``Pipeline.collect``) and ``render_packets_v2`` differ only in the
@@ -19,13 +25,14 @@ CURIE prefixes (:func:`curie_prefix`), the packet's resources.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from functools import reduce
+from operator import or_
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..descriptors import ContextKind, ContextualizedDataFrame
+from ..descriptors import Boundary, ContextKind, ContextualizedDataFrame
 from ..errors import strict_check
 from ..functions.durations import time_element_expr
 from ..operators import grouping
@@ -46,19 +53,21 @@ def _union(frames: list[DataFrame]) -> Optional[DataFrame]:
 
 
 def _linked_col(cdf: ContextualizedDataFrame, block: Optional[str], kind: ContextKind,
-                time_type=None) -> Optional[str]:
+                boundary: Optional[Boundary] = None) -> Optional[str]:
     """G4 (~ contextualized_data_frame.rs:166-282): ≤1 column with the given
-    context inside a building block; >1 → error (plan-build time)."""
+    context (and reference-range ``boundary``) inside a building block;
+    >1 → error (plan-build time)."""
     hits = [
         c
         for c, sc in cdf.resolved().items()
         if sc.building_block_id == block
         and sc.data_context.kind == kind
-        and (time_type is None or sc.data_context.time_type == time_type or sc.data_context.time_type is None)
+        and (boundary is None or sc.data_context.boundary == boundary)
     ]
     if len(hits) > 1:
+        what = f"{kind} {boundary.value}" if boundary else f"{kind}"
         raise grouping.MultiplicityError(
-            f"table {cdf.context.name!r} block {block!r}: multiple {kind} columns {hits}"
+            f"table {cdf.context.name!r} block {block!r}: multiple {what} columns {hits}"
         )
     return hits[0] if hits else None
 
@@ -145,6 +154,37 @@ def _row_ord(cdf: ContextualizedDataFrame):
     return F.xxhash64(*[F.col(c) for c in cdf.df.columns])
 
 
+def _anchor_rows(cdfs: Sequence[ContextualizedDataFrame], kinds, fields) -> Optional[DataFrame]:
+    """The row-zip (G5) every column-anchored collector is built on.  For
+    each column whose context kind is in ``kinds`` — table order, then
+    column order — its non-null rows (P6) projected to ``(subject_id,
+    *fields(cdf, col, sc, link), ord)``.  ``link(kind, type="string",
+    boundary=None)`` is the block's linked column of that kind (G4) cast to
+    ``type``, or a typed null; ``ord`` is ``struct(r, i)``: ``r`` the
+    column's frame index, ``i`` its :func:`_row_ord`."""
+    frames = []
+    for cdf in cdfs:
+        for col, sc in cdf.resolved().items():
+            if sc.data_context.kind not in kinds:
+                continue
+
+            def link(kind, type="string", boundary=None):
+                c = _linked_col(cdf, sc.building_block_id, kind, boundary)
+                return (F.col(c) if c else F.lit(None)).cast(type)
+
+            frames.append(
+                cdf.df.filter(F.col(col).isNotNull()).select(
+                    _subject(cdf),
+                    *fields(cdf, col, sc, link),
+                    F.struct(
+                        F.lit(len(frames)).cast("long").alias("r"),
+                        _row_ord(cdf).alias("i"),
+                    ).alias("ord"),
+                )
+            )
+    return _union(frames)
+
+
 def collect_hpo_in_cells(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[DataFrame]:
     """HpoInCellsCollector (~ hpo_in_cells_collector.rs:53-98): per HPO
     column, row-zip with linked onset/resolution/severity/excluded (G5);
@@ -156,45 +196,23 @@ def collect_hpo_in_cells(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[Da
     preserves the reference builder's insertion position for section
     ordering (IndexMap upsert keeps the original slot).
     Long form: (subject_id, hpo_id, onset, resolution, severity, excluded, ord)."""
-    frames = []
-    fidx = 0
-    for cdf in cdfs:
-        for col in cdf.columns_with_kind(ContextKind.HPO):
-            sc = cdf.resolved()[col]
-            block = sc.building_block_id
-            onset = _linked_col(cdf, block, ContextKind.ONSET)
-            resolution = _linked_col(cdf, block, ContextKind.TIME_OF_RESOLUTION)
-            severity = _linked_col(cdf, block, ContextKind.SEVERITY)
-            obs = _linked_col(cdf, block, ContextKind.OBSERVATION_STATUS)
 
-            def s(name):
-                return F.col(name).cast("string") if name else F.lit(None).cast("string")
+    def fields(cdf, col, sc, link):
+        obs = _linked_col(cdf, sc.building_block_id, ContextKind.OBSERVATION_STATUS)
+        return [
+            F.col(col).cast("string").alias("hpo_id"),
+            link(ContextKind.ONSET).alias("onset"),
+            link(ContextKind.TIME_OF_RESOLUTION).alias("resolution"),
+            link(ContextKind.SEVERITY).alias("severity"),
+            (~F.col(obs).cast("boolean") if obs else F.lit(False)).alias("excluded"),
+        ]
 
-            frames.append(
-                cdf.df.filter(F.col(col).isNotNull()).select(
-                    _subject(cdf),
-                    F.col(col).cast("string").alias("hpo_id"),
-                    s(onset).alias("onset"),
-                    s(resolution).alias("resolution"),
-                    s(severity).alias("severity"),
-                    (
-                        (~F.col(obs).cast("boolean")).alias("excluded")
-                        if obs
-                        else F.lit(False).alias("excluded")
-                    ),
-                    F.struct(
-                        F.lit(fidx).cast("long").alias("r"),
-                        _row_ord(cdf).alias("i"),
-                    ).alias("seq"),
-                )
-            )
-            fidx += 1
-    long = _union(frames)
+    long = _anchor_rows(cdfs, {ContextKind.HPO}, fields)
     if long is None:
         return None
     from pyspark.sql.window import Window
 
-    long = long.withColumn(
+    long = long.withColumnRenamed("ord", "seq").withColumn(
         "ord", F.min("seq").over(Window.partitionBy("subject_id", "hpo_id"))
     )
     return grouping.upsert_last(long, ["subject_id", "hpo_id"], "seq",
@@ -251,132 +269,49 @@ def collect_diseases(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[DataFr
     groupBy) keeping the FIRST arrival position as ``ord``; distinct
     (disease, onset) combinations stay separate entries like the
     reference's per-row builder pushes."""
-    frames = []
-    fidx = 0
-    for cdf in cdfs:
-        for col in cdf.columns_with_kind(ContextKind.DISEASE):
-            sc = cdf.resolved()[col]
-            block = sc.building_block_id
-            onset = _linked_col(cdf, block, ContextKind.ONSET)
-            site = _linked_col(cdf, block, ContextKind.PRIMARY_SITE)
-
-            def s(name):
-                return F.col(name).cast("string") if name else F.lit(None).cast("string")
-
-            frames.append(
-                cdf.df.filter(F.col(col).isNotNull()).select(
-                    _subject(cdf),
-                    F.col(col).cast("string").alias("disease_id"),
-                    s(onset).alias("onset"),
-                    s(site).alias("primary_site"),
-                    F.struct(
-                        F.lit(fidx).cast("long").alias("r"),
-                        _row_ord(cdf).alias("i"),
-                    ).alias("seq"),
-                )
-            )
-            fidx += 1
-    long = _union(frames)
+    long = _anchor_rows(cdfs, {ContextKind.DISEASE}, lambda cdf, col, sc, link: [
+        F.col(col).cast("string").alias("disease_id"),
+        link(ContextKind.ONSET).alias("onset"),
+        link(ContextKind.PRIMARY_SITE).alias("primary_site"),
+    ])
     if long is None:
         return None
     return long.groupBy("subject_id", "disease_id", "onset", "primary_site").agg(
-        F.min("seq").alias("ord")
+        F.min("ord").alias("ord")
     )
 
 
-def collect_quantitative_measurements(cdfs) -> Optional[DataFrame]:
-    """QuantitativeMeasurementCollector (~ quantitative_measurement_collector.rs:53-95):
-    value + assay (from context param) + unit + time + reference range.
-    ``ord`` = (table index, series position, row order) so quantitative and
-    qualitative measurements interleave in column order like the reference."""
-    frames = []
-    for tidx, cdf in enumerate(cdfs):
-        for col, sc in cdf.resolved().items():
-            if sc.data_context.kind != ContextKind.QUANTITATIVE_MEASUREMENT:
-                continue
-            block = sc.building_block_id
-            t = _linked_col(cdf, block, ContextKind.TIME_OF_MEASUREMENT)
-            lo = _linked_ref(cdf, block, "start")
-            hi = _linked_ref(cdf, block, "end")
-
-            def s(name):
-                return F.col(name).cast("string") if name else F.lit(None).cast("string")
-
-            def d(name):
-                return F.col(name).cast("double") if name else F.lit(None).cast("double")
-
-            frames.append(
-                cdf.df.filter(F.col(col).isNotNull()).select(
-                    _subject(cdf),
-                    F.lit(sc.data_context.assay_id).alias("assay_id"),
-                    F.col(col).cast("double").alias("value"),
-                    F.lit(sc.data_context.unit_ontology_id).alias("unit"),
-                    s(t).alias("time_observed"),
-                    d(lo).alias("ref_low"),
-                    d(hi).alias("ref_high"),
-                    F.struct(
-                        F.lit(tidx).cast("long").alias("r"),
-                        F.lit(_meas_ord(cdf, col)).cast("long").alias("c"),
-                        _row_ord(cdf).alias("i"),
-                    ).alias("ord"),
-                )
-            )
-    return _union(frames)
+_REFERENCE_RANGE = {"ref_low": Boundary.START, "ref_high": Boundary.END}
 
 
-def _meas_ord(cdf: ContextualizedDataFrame, col: str) -> int:
-    """Series position of a measurement column within its table — the
-    reference pushes measurements in column order, quantitative and
-    qualitative interleaved."""
-    return cdf.df.columns.index(col)
+def measurement_rows(cdfs: Sequence[ContextualizedDataFrame], kinds) -> Optional[DataFrame]:
+    """Quantitative (~ quantitative_measurement_collector.rs:53-95) and
+    qualitative (~ qualitative_measurement_collector.rs) measurements of the
+    context ``kinds`` given, as one long frame in (table, column) order —
+    the reference pushes both kinds interleaved in column order.  The assay
+    (and a quantitative column's unit) come from the context parameters.
+    Long form: (subject_id, assay_id, value, value_id, unit, time_observed,
+    ref_low, ref_high, ord).  A quantitative row has a null ``value_id``; a
+    qualitative row (an ontology-coded value, e.g. a PATO term after
+    normalization) has a null ``value``, ``unit`` and reference range."""
 
+    def fields(cdf, col, sc, link):
+        ctx = sc.data_context
+        quant = ctx.kind == ContextKind.QUANTITATIVE_MEASUREMENT
+        value, none = F.col(col), F.lit(None)
+        return [
+            F.lit(ctx.assay_id).cast("string").alias("assay_id"),
+            (value if quant else none).cast("double").alias("value"),
+            (none if quant else value).cast("string").alias("value_id"),
+            F.lit(ctx.unit_ontology_id if quant else None).cast("string").alias("unit"),
+            link(ContextKind.TIME_OF_MEASUREMENT).alias("time_observed"),
+            *[
+                (link(ContextKind.REFERENCE_RANGE, "double", b) if quant else none.cast("double")).alias(k)
+                for k, b in _REFERENCE_RANGE.items()
+            ],
+        ]
 
-def collect_qualitative_measurements(cdfs) -> Optional[DataFrame]:
-    """QualitativeMeasurementCollector (~ qualitative_measurement_collector.rs):
-    ontology-coded measurement values (e.g. PATO terms, post-normalization)
-    + assay from the context parameter + linked observation time.
-    Long form: (subject_id, assay_id, value_id, time_observed, ord)."""
-    frames = []
-    for tidx, cdf in enumerate(cdfs):
-        for col, sc in cdf.resolved().items():
-            if sc.data_context.kind != ContextKind.QUALITATIVE_MEASUREMENT:
-                continue
-            block = sc.building_block_id
-            t = _linked_col(cdf, block, ContextKind.TIME_OF_MEASUREMENT)
-
-            def s(name):
-                return F.col(name).cast("string") if name else F.lit(None).cast("string")
-
-            frames.append(
-                cdf.df.filter(F.col(col).isNotNull()).select(
-                    _subject(cdf),
-                    F.lit(sc.data_context.assay_id).alias("assay_id"),
-                    F.col(col).cast("string").alias("value_id"),
-                    s(t).alias("time_observed"),
-                    F.struct(
-                        F.lit(tidx).cast("long").alias("r"),
-                        F.lit(_meas_ord(cdf, col)).cast("long").alias("c"),
-                        _row_ord(cdf).alias("i"),
-                    ).alias("ord"),
-                )
-            )
-    return _union(frames)
-
-
-def _linked_ref(cdf, block, boundary: str) -> Optional[str]:
-    from ..descriptors import Boundary
-
-    want = Boundary.START if boundary == "start" else Boundary.END
-    hits = [
-        c
-        for c, sc in cdf.resolved().items()
-        if sc.building_block_id == block
-        and sc.data_context.kind == ContextKind.REFERENCE_RANGE
-        and sc.data_context.boundary == want
-    ]
-    if len(hits) > 1:
-        raise grouping.MultiplicityError(f"multiple reference-range {boundary} cols {hits}")
-    return hits[0] if hits else None
+    return _anchor_rows(cdfs, kinds, fields)
 
 
 # phenopackets DrugType enum (phenopacket_builder.rs:578-585 parses via
@@ -399,10 +334,6 @@ MEDICAL_ACTION_FIELDS = {
 }
 
 
-def _medical_action_cols(cdf: ContextualizedDataFrame, block: Optional[str]):
-    return {k: _linked_col(cdf, block, kind) for k, kind in MEDICAL_ACTION_FIELDS.items()}
-
-
 def collect_medical_procedures(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[DataFrame]:
     """MedicalProcedureCollector (~ medical_procedure_collector.rs:96-135):
     per Procedure column, row-zip the linked body-site / time-of-procedure /
@@ -414,17 +345,10 @@ def collect_medical_procedures(cdfs: Sequence[ContextualizedDataFrame]) -> Optio
     error.  Long form: (subject_id, procedure_code, body_site, performed,
     treatment_target, treatment_intent, response_to_treatment,
     treatment_termination_reason, ord)."""
-    frames = []
-    fidx = 0
     for cdf in cdfs:
-        blocks = {sc.building_block_id for sc in cdf.resolved().values()}
-        proc_blocks = set()
-        for col, sc in cdf.resolved().items():
-            if sc.data_context.kind == ContextKind.PROCEDURE:
-                proc_blocks.add(sc.building_block_id)
-        for block in blocks:
-            if block in proc_blocks:
-                continue
+        resolved = cdf.resolved().values()
+        proc_blocks = {sc.building_block_id for sc in resolved if sc.data_context.kind == ContextKind.PROCEDURE}
+        for block in {sc.building_block_id for sc in resolved} - proc_blocks:
             orphan = _linked_col(cdf, block, ContextKind.PROCEDURE_BODY_SITE) or _linked_col(
                 cdf, block, ContextKind.TIME_OF_PROCEDURE
             )
@@ -433,32 +357,12 @@ def collect_medical_procedures(cdfs: Sequence[ContextualizedDataFrame]) -> Optio
                     f"table {cdf.context.name!r} block {block!r}: column {orphan!r} "
                     "(procedure body-site/time) has no Procedure column in its block"
                 )
-        for col, sc in cdf.resolved().items():
-            if sc.data_context.kind != ContextKind.PROCEDURE:
-                continue
-            block = sc.building_block_id
-            body = _linked_col(cdf, block, ContextKind.PROCEDURE_BODY_SITE)
-            t = _linked_col(cdf, block, ContextKind.TIME_OF_PROCEDURE)
-            act = _medical_action_cols(cdf, block)
-
-            def s(name):
-                return F.col(name).cast("string") if name else F.lit(None).cast("string")
-
-            frames.append(
-                cdf.df.filter(F.col(col).isNotNull()).select(
-                    _subject(cdf),
-                    F.col(col).cast("string").alias("procedure_code"),
-                    s(body).alias("body_site"),
-                    s(t).alias("performed"),
-                    *[s(c).alias(k) for k, c in act.items()],
-                    F.struct(
-                        F.lit(fidx).cast("long").alias("r"),
-                        _row_ord(cdf).alias("i"),
-                    ).alias("ord"),
-                )
-            )
-            fidx += 1
-    return _union(frames)
+    return _anchor_rows(cdfs, {ContextKind.PROCEDURE}, lambda cdf, col, sc, link: [
+        F.col(col).cast("string").alias("procedure_code"),
+        link(ContextKind.PROCEDURE_BODY_SITE).alias("body_site"),
+        link(ContextKind.TIME_OF_PROCEDURE).alias("performed"),
+        *[link(kind).alias(k) for k, kind in MEDICAL_ACTION_FIELDS.items()],
+    ])
 
 
 def collect_medical_treatments(
@@ -474,19 +378,17 @@ def collect_medical_treatments(
       route/drug/dose columns with no agent column in the block, a dose value
       column without a unit column (or vice versa), or a reference-range
       boundary without its pair → error before any job runs;
-    - row-level (~ medical_treatment_data.rs:104-117): a null agent alongside
-      non-null route/drug/dose values → RequiredValueMissing, raised now as
-      MultiplicityError after a bounded collect.  Like every collector
-      check it reads the rows ``Pipeline.transform`` stored at its barrier,
-      after the Pipeline's ledger has validated, so it is never deferred.
+    - row-level (~ medical_treatment_data.rs:104-117, G12): a null agent
+      alongside non-null route/drug/dose values → RequiredValueMissing,
+      raised now as MultiplicityError after a bounded collect (the
+      ``treatment_agent_missing`` probe).  Like every collector check it
+      reads the rows ``Pipeline.transform`` stored at its barrier, after the
+      Pipeline's ledger has validated, so it is never deferred.
 
     Long form: (subject_id, agent, route_of_administration, drug_type,
     dose_value, dose_unit, ref_low, ref_high, treatment_target,
     treatment_intent, response_to_treatment, treatment_termination_reason,
     ord)."""
-    frames = []
-    bad_frames = []
-    fidx = 0
     for cdf in cdfs:
         agent_blocks = {
             sc.building_block_id
@@ -496,74 +398,49 @@ def collect_medical_treatments(
         for col, sc in cdf.resolved().items():
             kind = sc.data_context.kind
             if (
-                kind
-                in (
-                    ContextKind.ROUTE_OF_ADMINISTRATION,
-                    ContextKind.DRUG_TYPE,
-                )
+                kind in (ContextKind.ROUTE_OF_ADMINISTRATION, ContextKind.DRUG_TYPE)
                 and sc.building_block_id not in agent_blocks
             ):
                 raise grouping.MultiplicityError(
                     f"table {cdf.context.name!r} block {sc.building_block_id!r}: "
                     f"column {col!r} ({kind.value}) has no TreatmentAgent column in its block"
                 )
-        for col, sc in cdf.resolved().items():
-            if sc.data_context.kind != ContextKind.TREATMENT_AGENT:
-                continue
-            block = sc.building_block_id
-            route = _linked_col(cdf, block, ContextKind.ROUTE_OF_ADMINISTRATION)
-            drug = _linked_col(cdf, block, ContextKind.DRUG_TYPE)
-            qval = _linked_col(cdf, block, ContextKind.QUANTITY_VALUE)
-            qunit = _linked_col(cdf, block, ContextKind.QUANTITY_UNIT)
-            if (qval is None) != (qunit is None):
-                raise grouping.MultiplicityError(
-                    f"table {cdf.context.name!r} block {block!r}: cumulative dose needs "
-                    f"BOTH QuantityValue and QuantityUnit columns (have value={qval!r}, unit={qunit!r})"
-                )
-            lo = _linked_ref(cdf, block, "start")
-            hi = _linked_ref(cdf, block, "end")
-            if (lo is None) != (hi is None):
-                raise grouping.MultiplicityError(
-                    f"table {cdf.context.name!r} block {block!r}: reference range needs "
-                    f"BOTH start and end columns (have start={lo!r}, end={hi!r})"
-                )
-            act = _medical_action_cols(cdf, block)
+    bad_frames = []
 
-            def s(name):
-                return F.col(name).cast("string") if name else F.lit(None).cast("string")
-
-            def d(name):
-                return F.col(name).cast("double") if name else F.lit(None).cast("double")
-
-            others = [c for c in (route, drug, qval, qunit) if c]
-            if others:
-                present = None
-                for c in others:
-                    p = F.col(c).isNotNull()
-                    present = p if present is None else (present | p)
-                bad_frames.append(
-                    cdf.df.filter(F.col(col).isNull() & present).select(
-                        _subject(cdf).alias("offender")
-                    )
-                )
-            frames.append(
-                cdf.df.filter(F.col(col).isNotNull()).select(
-                    _subject(cdf),
-                    F.col(col).cast("string").alias("agent"),
-                    s(route).alias("route_of_administration"),
-                    s(drug).alias("drug_type"),
-                    d(qval).alias("dose_value"),
-                    s(qunit).alias("dose_unit"),
-                    d(lo).alias("ref_low"),
-                    d(hi).alias("ref_high"),
-                    *[s(c).alias(k) for k, c in act.items()],
-                    F.struct(
-                        F.lit(fidx).cast("long").alias("r"),
-                        _row_ord(cdf).alias("i"),
-                    ).alias("ord"),
-                )
+    def fields(cdf, col, sc, link):
+        block = sc.building_block_id
+        route, drug, qval, qunit = (_linked_col(cdf, block, k) for k in (
+            ContextKind.ROUTE_OF_ADMINISTRATION, ContextKind.DRUG_TYPE,
+            ContextKind.QUANTITY_VALUE, ContextKind.QUANTITY_UNIT,
+        ))
+        if (qval is None) != (qunit is None):
+            raise grouping.MultiplicityError(
+                f"table {cdf.context.name!r} block {block!r}: cumulative dose needs "
+                f"BOTH QuantityValue and QuantityUnit columns (have value={qval!r}, unit={qunit!r})"
             )
-            fidx += 1
+        lo, hi = (_linked_col(cdf, block, ContextKind.REFERENCE_RANGE, b) for b in _REFERENCE_RANGE.values())
+        if (lo is None) != (hi is None):
+            raise grouping.MultiplicityError(
+                f"table {cdf.context.name!r} block {block!r}: reference range needs "
+                f"BOTH start and end columns (have start={lo!r}, end={hi!r})"
+            )
+        others = [c for c in (route, drug, qval, qunit) if c]
+        if others:
+            present = reduce(or_, [F.col(c).isNotNull() for c in others])
+            bad_frames.append(
+                cdf.df.filter(F.col(col).isNull() & present).select(_subject(cdf).alias("offender"))
+            )
+        return [
+            F.col(col).cast("string").alias("agent"),
+            link(ContextKind.ROUTE_OF_ADMINISTRATION).alias("route_of_administration"),
+            link(ContextKind.DRUG_TYPE).alias("drug_type"),
+            link(ContextKind.QUANTITY_VALUE, "double").alias("dose_value"),
+            link(ContextKind.QUANTITY_UNIT).alias("dose_unit"),
+            *[link(ContextKind.REFERENCE_RANGE, "double", b).alias(k) for k, b in _REFERENCE_RANGE.items()],
+            *[link(kind).alias(k) for k, kind in MEDICAL_ACTION_FIELDS.items()],
+        ]
+
+    rows = _anchor_rows(cdfs, {ContextKind.TREATMENT_AGENT}, fields)
     if bad_frames:
         strict_check(
             None, "treatment_agent_missing", _union(bad_frames),
@@ -573,7 +450,7 @@ def collect_medical_treatments(
             ),
             limit=grouping.ERROR_LIMIT,
         )
-    return _union(frames)
+    return rows
 
 
 def _broker_rows(halves, cols: dict[str, str]) -> Optional[DataFrame]:
@@ -691,7 +568,7 @@ def interpretation_rows(cdfs: Sequence[ContextualizedDataFrame]) -> Optional[Dat
             local_disease = _linked_col(cdf, block, ContextKind.DISEASE)
             base = cdf.df.select(
                 _subject(cdf),
-                (F.col(local_disease).cast("string") if local_disease else F.lit(None).cast("string")).alias("disease"),
+                (F.col(local_disease) if local_disease else F.lit(None)).cast("string").alias("disease"),
                 genes_arr.alias("genes"),
                 variants_arr.alias("variants"),
                 F.struct(

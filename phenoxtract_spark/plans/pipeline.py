@@ -104,7 +104,7 @@ class Pipeline:
         if dis is not None:
             sections["diseases"] = dis
         meas = collectors.measurements_section(
-            collectors.collect_quantitative_measurements(cdfs)
+            collectors.measurement_rows(cdfs, {ContextKind.QUANTITATIVE_MEASUREMENT})
         )
         if meas is not None:
             sections["measurements"] = meas

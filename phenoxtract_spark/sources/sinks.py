@@ -17,12 +17,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_jsonl(packets: DataFrame, path: str, num_shards: int | None = None) -> None:
+def write_jsonl(packets: DataFrame, path: str) -> None:
     """Scale path: sharded JSONL of the ``packet_json`` strings."""
-    out = packets.select("packet_json")
-    if num_shards:
-        out = out.repartition(num_shards)
-    out.write.mode("overwrite").text(path)
+    packets.select("packet_json").write.mode("overwrite").text(path)
 
 
 def write_file_per_subject(packets: DataFrame, out_dir: str) -> None:

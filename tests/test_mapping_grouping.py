@@ -1,5 +1,5 @@
 """Mapping strategies (M1-M5) incl. V6 error accumulation, and the
-per-subject grouping operators (G3, G6, G7, G12)."""
+per-subject grouping operators (G3, G6, G7)."""
 
 import pytest
 
@@ -105,16 +105,6 @@ def test_header_collapse_excluded(spark):
     rows = [(r["subject_id"], r["observed"], r["excluded"]) for r in out.collect()]
     # p3's (null,null) pair is dropped entirely
     assert rows == [("p1", False, True), ("p2", True, False)]
-
-
-def test_require_anchor(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0), (None, None), (None, 2.0)], "agent string, dose double"
-    )
-    ok = df.filter(F.col("dose") != 2.0)
-    assert grouping.require_anchor(ok, "agent", ["dose"]).count() == 1
-    with pytest.raises(grouping.MultiplicityError):
-        grouping.require_anchor(df, "agent", ["dose"])
 
 
 def test_pre_resolve_pattern(spark):
